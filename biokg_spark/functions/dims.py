@@ -16,6 +16,8 @@ fixed-cost job from each (guide §1.2 step 1: job-count, before config).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -24,11 +26,21 @@ def _sql_lit(v) -> str:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
+    if isinstance(v, float):
+        if math.isfinite(v):
+            # a D-suffixed double literal: a bare 1.5 parses as a decimal,
+            # which drops the sign of -0.0
+            return repr(v) + "D"
+        # repr gives nan/inf, which Spark SQL parses as column names
+        special = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{special}' AS DOUBLE)"
+    if isinstance(v, int):
         return repr(v)
     if isinstance(v, (list, tuple)):
         return "array(" + ",".join(_sql_lit(x) for x in v) + ")"
-    return "'" + str(v).replace("'", "''") + "'"
+    # Spark SQL string literals process backslash escapes: escape the
+    # backslash itself first, then double the quote
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -41,6 +41,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _QUANT = 1_000_000.0
+# (cluster, bucket) join keys per pair-stage task in semantic_dedup, so
+# clusters of unequal size still hash out evenly over the tasks
+_KEYS_PER_TASK = 4
 
 
 def _sqdist(v: Column, cent: list[float]) -> Column:
@@ -85,6 +88,18 @@ def kmeans_assign(
     by an assignment round keeps its previous centroid (cannot happen
     with distinct init points and the id tie-break, but guarded).
     """
+    pts, cents = _lloyd(emb, id_col, vec_col, k, iterations)
+    out = _assign(pts, cents).select(id_col, "cluster", "dist_u6")
+    pts.unpersist()
+    return out
+
+
+def _lloyd(
+    emb: DataFrame, id_col: str, vec_col: str, k: int, iterations: int
+) -> tuple[DataFrame, list[list[float]]]:
+    """Lloyd's rounds of :func:`kmeans_assign`: the cached ``(id_col, v)``
+    points (``v`` the double-cast vector) and the final centroids. The
+    caller unpersists the points."""
     pts = emb.select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -110,9 +125,7 @@ def kmeans_assign(
             else cents[ci]
             for ci in range(k)
         ]
-    out = _assign(pts, cents).select(id_col, "cluster", "dist_u6")
-    pts.unpersist()
-    return out
+    return pts, cents
 
 
 def kmeans_oracle_ctes(
@@ -219,18 +232,32 @@ def semantic_dedup(
     all keep) rather than detonate the join. The k-means stage itself
     never touches the driver beyond k×d centroid rows per iteration.
 
+    The pair stage: the final assignment is materialized once, holding
+    each point's double vector, its L2 norm
+    (:func:`similarity.with_norm`), cluster and dist_u6, so a candidate
+    pair pays only the dot product. The cluster id alone has k values,
+    too few to spread a quadratic stage, so each b-side point gets a
+    hash bucket ``_g`` and the a side explodes over all buckets: the
+    join key (cluster, _g) has k × n_buckets values, several per task,
+    and every (x, y) pair still meets exactly once, via y's bucket.
+    Both sides are hash-spread on that key to a pinned
+    :func:`similarity.fanout` width. AQE would otherwise size the
+    partitions by input bytes and pack the whole pair stage of a small
+    input, whose work grows with the square of the cluster sizes, into
+    one task.
+
     Reference: n/a — training-data-pipeline mandate (semantic dedup);
     cosine/rounding contract shared with operators/similarity.py so the
     DuckDB twin (queries.py::corpus_semantic_dedup) is value-exact.
     """
-    from biokg_spark.operators.similarity import cosine_similarity
+    from biokg_spark.operators.similarity import cosine_normed, fanout, with_norm
 
-    assign = kmeans_assign(emb, id_col, vec_col, k, iterations).localCheckpoint(eager=True)
-    # both sides of the within-cluster self-join read pts; materialize it
-    # once so the emb-scan + assignment join runs once (no cross-branch CSE).
-    pts = emb.select(id_col, vec_col).join(assign, id_col).localCheckpoint(
+    pts, cents = _lloyd(emb, id_col, vec_col, k, iterations)
+    assign = with_norm(_assign(pts, cents), "v", "_norm").localCheckpoint(
         eager=True
     )
+    pts.unpersist()
+    paired = assign
     if max_cluster_size is not None:
         ok = (
             assign.groupBy("cluster")
@@ -238,40 +265,31 @@ def semantic_dedup(
             .where(F.col("_n") <= max_cluster_size)
             .select("cluster")
         )
-        pts = pts.join(ok, "cluster", "left_semi")
-    # Bucket-split the within-cluster self-join (guide §2.5 salting): a
-    # join keyed on the cluster id alone has only k distinct keys, so
-    # the QUADRATIC pair stage runs on at most k tasks no matter how
-    # wide the cluster is (measured: ~1.7 busy cores at k=8 on a 10x
-    # input, 7.4 s -> >8 min). Each b-side point gets a deterministic
-    # hash bucket; the a side explodes over all B buckets, so the join
-    # key (cluster, bucket) has k*B values and the SAME candidate pair
-    # multiset comes out (every (x, y) pair appears exactly once, via
-    # y's bucket). B adapts to the cluster width, never a constant.
-    n_buckets = max(
-        1, -(-emb.sparkSession.sparkContext.defaultParallelism // k)
-    )
-    a = pts.select(
+        paired = assign.join(ok, "cluster", "left_semi")
+    width = fanout(emb.sparkSession, assign)
+    n_buckets = -(-_KEYS_PER_TASK * width // k)
+    a = paired.select(
         "cluster",
         F.col(id_col).alias("_ida"),
-        F.col(vec_col).alias("_va"),
+        F.col("v").alias("_va"),
+        F.col("_norm").alias("_na"),
         F.col("dist_u6").alias("_da"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(n_buckets - 1))
-        ).alias("_g"),
-    )
-    b = pts.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("_g"),
+    ).repartition(width, "cluster", "_g")
+    b = paired.select(
         "cluster",
         F.col(id_col).alias("_idb"),
-        F.col(vec_col).alias("_vb"),
+        F.col("v").alias("_vb"),
+        F.col("_norm").alias("_nb"),
         F.col("dist_u6").alias("_db"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int").alias("_g"),
-    )
+    ).repartition(width, "cluster", "_g")
     losers = (
         a.join(b, ["cluster", "_g"])
         .where(F.col("_ida") < F.col("_idb"))
         .where(
-            cosine_similarity(F.col("_va"), F.col("_vb")) >= threshold
+            cosine_normed(F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb"))
+            >= threshold
         )
         .select(
             F.when(F.col("_da") < F.col("_db"), F.col("_ida"))

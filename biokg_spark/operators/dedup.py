@@ -434,16 +434,40 @@ def embedding_near_dup_pairs(
     self-equi-join on the bucket key — never a cross join. At 100 TB the
     bucket is the table's partition key and each bucket joins co-located.
     Output: (id_a, id_b, sim) with id_a < id_b and sim ≥ threshold.
+
+    Scale shape: the per-vector half of the cosine (the double cast and
+    the L2 norm, :func:`similarity.with_norm`) runs once per row before
+    the join, so each candidate pair pays only the dot product. The pair
+    work grows with the square of the bucket sizes while AQE sizes
+    partitions by input bytes, which packs a small table's whole
+    quadratic stage into one task. So the bucket frame is hash-spread by
+    id to a pinned :func:`similarity.fanout` width before it is
+    materialized; the join streams those partitions on every core. The
+    trailing rebalance lets AQE coalesce the output back by its own
+    bytes (one file for a small pair set).
     """
-    from biokg_spark.operators.similarity import cosine_similarity, sign_bucket
+    from biokg_spark.operators.similarity import (
+        cosine_normed,
+        fanout,
+        sign_bucket,
+        with_norm,
+    )
 
     # b is referenced by the hot-bucket guard and both join sides;
     # materialize once so the bucket computation + scan runs one time.
-    b = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_bucket(F.col(vec_col), sign_bits).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    b = (
+        with_norm(
+            df.select(
+                F.col(id_col),
+                F.col(vec_col),
+                sign_bucket(F.col(vec_col), sign_bits).alias("bucket"),
+            ),
+            vec_col,
+            "_norm",
+        )
+        .repartition(fanout(df.sparkSession, df), id_col)
+        .localCheckpoint(eager=True)
+    )
     if max_bucket_size is not None:
         ok = (
             b.groupBy("bucket")
@@ -462,9 +486,13 @@ def embedding_near_dup_pairs(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"c.{id_col}").alias("id_b"),
-            cosine_similarity(F.col(f"a.{vec_col}"), F.col(f"c.{vec_col}")).alias("sim"),
+            cosine_normed(
+                F.col(f"a.{vec_col}"), F.col("a._norm"),
+                F.col(f"c.{vec_col}"), F.col("c._norm"),
+            ).alias("sim"),
         )
         .where(F.col("sim") >= threshold)
+        .hint("rebalance")
     )
 
 

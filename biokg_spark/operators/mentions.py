@@ -544,12 +544,3 @@ def _executor_scanner(bc, backend: str, key: str) -> MentionScanner:
         s = MentionScanner(bc.value, backend=backend)
         _SCANNER_CACHE[key] = s
     return s
-
-
-def mentions_sql_oracle_predicate(surface_col: str, text_col: str) -> str:
-    """DuckDB boolean predicate with the same word-boundary semantics as
-    the scanner (used to build oracle SQL)."""
-    return (
-        f"regexp_matches(lower({text_col}), "
-        f"'(^|[^a-z0-9_])' || {surface_col} || '($|[^a-z0-9_])')"
-    )

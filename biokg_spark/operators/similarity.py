@@ -25,7 +25,7 @@ the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -49,6 +49,45 @@ def _norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column, decimals: int = 4) -> Column:
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), decimals)
+
+
+def with_norm(df: DataFrame, vec_col: str, norm_col: str) -> DataFrame:
+    """``df`` with ``vec_col`` cast to array<double> and its L2 norm added
+    as ``norm_col``: the per-vector half of :func:`cosine_similarity`,
+    done once per row before a pair join instead of twice per pair.
+    Pairs then score with :func:`cosine_normed`."""
+    return df.withColumn(
+        vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    ).withColumn(norm_col, _norm(F.col(vec_col)))
+
+
+def cosine_normed(
+    va: Column, na: Column, vb: Column, nb: Column, decimals: int = 4
+) -> Column:
+    """:func:`cosine_similarity` over two :func:`with_norm` projections.
+    The same double operations run in the same order, so the result is
+    bit-identical to scoring the raw vectors."""
+    return F.round(_dot(va, vb) / (na * nb), decimals)
+
+
+def fanout(spark: SparkSession, df: DataFrame | None = None) -> int:
+    """Partition width for compute-heavy stages over few-partition inputs.
+
+    The session's default parallelism (scale-adaptive, not a constant),
+    and never less than ``df``'s own partition count, so a wide input is
+    not narrowed. Pass a scan or a checkpoint: counting the partitions of
+    a plan with a shuffle would run that shuffle.
+
+    Small tables arrive as ONE parquet split, and AQE sizes post-shuffle
+    partitions by input bytes, so work that grows faster than the input
+    (MinHash hashing per exploded shingle, quadratic pair joins) would
+    run on one task whatever the cluster width. An explicit
+    ``repartition(fanout(...), keys)`` is never coalesced by AQE.
+    """
+    width = spark.sparkContext.defaultParallelism
+    if df is not None:
+        width = max(width, df.rdd.getNumPartitions())
+    return width
 
 
 def cosine_topk(

@@ -42,7 +42,7 @@ from biokg_spark.operators.dedup import (
 from biokg_spark.operators.edges import canonical_undirected, conflict_exclusion
 from biokg_spark.operators.hierarchy import expand_prefixes
 from biokg_spark.operators.mentions import scan_mentions
-from biokg_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
+from biokg_spark.operators.similarity import cosine_topk, fanout, lsh_bucketed_topk
 from biokg_spark.pipeline.kg import cooccurrence_links
 from biokg_spark.sources.tables import load_table
 
@@ -96,9 +96,9 @@ def doc_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream tokenize/explode of ~45 consumer queries would run at
     # input parallelism 1 (measured: kg_mentions 0.6 → 1.9 s). Keep a
     # deterministic hash repartition — an Exchange without the window's
-    # Sort, scale-adaptive via defaultParallelism (the _fanout idiom).
+    # Sort, scale-adaptive via defaultParallelism (the fanout idiom).
     docs = load_table(spark, sf_dir, "documents")
-    p = _fanout(spark)
+    p = fanout(spark)
     return docs.repartition(
         p, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(p * 32))
     ).select(
@@ -159,21 +159,6 @@ def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
-
-
-def _fanout(spark: SparkSession) -> int:
-    """Fan-out width for compute-heavy explodes over few-partition scans.
-
-    The documents table at bench scale is ONE small parquet file, so the
-    per-shingle hash evaluation of the MinHash family (k md5 calls per
-    exploded shingle, evaluated in the partial-aggregate stage) would run
-    at input parallelism = 1 regardless of cluster width. Repartitioning
-    the exploded rows to the cluster's parallelism first (guide §2.2:
-    scale-adaptive partitioning, not a constant) spreads the hash work;
-    the partial min still reduces each partition map-side. Results are
-    invariant to the fan-out (min/count aggregates are order-free).
-    """
-    return spark.sparkContext.defaultParallelism
 
 
 def q(name: str, sql: str | None):
@@ -1414,7 +1399,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     return minhash_lsh_candidates(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
         num_hashes=8, bands=4, width=3, max_bucket_size=20,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
 
 
@@ -1455,7 +1440,7 @@ def dedup_cluster_components(spark, sf_dir):
 
     pairs = minhash_lsh_candidates(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        num_hashes=8, bands=4, width=3, shingle_partitions=_fanout(spark),
+        num_hashes=8, bands=4, width=3, shingle_partitions=fanout(spark),
     )
     return connected_components(pairs)
 
@@ -1477,7 +1462,7 @@ def dedup_cluster_components(spark, sf_dir):
 def dedup_minhash_signature(spark, sf_dir):
     sigs = minhash_signatures(
         load_table(spark, sf_dir, "documents"), "text", "doc_id", num_hashes=8,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
     sig_str = F.array_join(
         F.transform("sig", lambda h: h.cast("string")), "|"
@@ -2172,7 +2157,7 @@ def corpus_slice_overlap(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return slice_overlap(
         docs, "source", "text", num_hashes=32, width=3,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
 
 
@@ -2275,7 +2260,7 @@ def corpus_leakage_safe_split(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, width=3,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
     comp = connected_components(pairs)
     return (
@@ -4681,7 +4666,7 @@ def dedup_blocking_metrics(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, width=3,
-        max_bucket_size=20, shingle_partitions=_fanout(spark),
+        max_bucket_size=20, shingle_partitions=fanout(spark),
     )
     fp = docs.select(F.col("doc_id"), doc_fingerprint("text").alias("f"))
     a, b = fp.alias("a"), fp.alias("b")
@@ -5714,7 +5699,7 @@ def dedup_keep_best(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, width=3,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
     comp = connected_components(pairs)
     toks = docs.select(
@@ -6086,7 +6071,7 @@ def dedup_source_matrix(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_candidates(
         docs, "text", "doc_id", num_hashes=8, bands=4, width=3,
-        shingle_partitions=_fanout(spark),
+        shingle_partitions=fanout(spark),
     )
     src = docs.select("doc_id", "source")
     j = (

@@ -140,10 +140,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    """Stop the active session (bench harness restarts at a new core count)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

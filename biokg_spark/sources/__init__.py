@@ -1,3 +1,3 @@
-from biokg_spark.sources.tables import TABLES, load_table, load_tables, write_tsv
+from biokg_spark.sources.tables import TABLES, load_table, write_tsv
 
-__all__ = ["TABLES", "load_table", "load_tables", "write_tsv"]
+__all__ = ["TABLES", "load_table", "write_tsv"]

@@ -107,12 +107,12 @@ def test_semantic_dedup_exact_copies_tie_break_and_cap(spark):
 def test_semantic_dedup_bucket_split_finds_cross_bucket_pairs(spark):
     """The salted pair join (b-side hash bucket, a-side bucket explode)
     must pair points REGARDLESS of which bucket each lands in: a cluster
-    wider than defaultParallelism/k spans several buckets, and every
-    near-dup pair must still surface exactly once."""
+    spans several buckets, and every near-dup pair must still surface
+    exactly once."""
     from biokg_spark.operators.clustering import semantic_dedup
 
     # 70 points in one tight blob (every pair cosine ~1.0) + 2 far seeds
-    # so k=2 init separates; bucket count B = ceil(parallelism/2) > 1.
+    # so k=2 init separates; bucket count B = ceil(4 * parallelism/2) > 1.
     rows = [(i, [1.0, 1.0 + i * 1e-9]) for i in range(70)]
     rows += [(100, [-50.0, 40.0]), (101, [-50.0, 41.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -122,3 +122,28 @@ def test_semantic_dedup_bucket_split_finds_cross_bucket_pairs(spark):
     # exactly ONE survivor in the blob: all 70 are mutual near-dups, so
     # a missed cross-bucket pair would leave extra keepers
     assert sum(blob.values()) == 1, blob
+
+
+def test_semantic_dedup_pair_stage_spreads_over_every_core(
+    spark, tmp_path, busiest_stage_tasks
+):
+    """k clusters are fewer keys than cores and AQE sizes partitions by
+    input bytes; the (cluster, bucket) pair stage of a one-file input
+    must still run on at least defaultParallelism tasks."""
+    from biokg_spark.operators.clustering import semantic_dedup
+
+    rows = [
+        (i, [1.0 + (i * 7 + j * 13) % 29 for j in range(16)]) for i in range(600)
+    ]
+    src = str(tmp_path / "emb")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(
+        1
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    assert df.rdd.getNumPartitions() == 1
+    out = []
+    tasks = busiest_stage_tasks(
+        lambda: out.extend(semantic_dedup(df, k=2, iterations=2).collect())
+    )
+    assert tasks >= spark.sparkContext.defaultParallelism
+    assert len(out) == 600

@@ -507,3 +507,34 @@ def test_containment_catches_truncated_twin_jaccard_misses(spark):
     jac = ngram_jaccard_pairs(df, "text", "doc_id", width=3, threshold=0.5)
     # Jaccard = 8/38 ~ 0.21: below any near-dup threshold
     assert jac.count() == 0
+
+
+def test_embedding_pair_stage_spreads_over_every_core(
+    spark, tmp_path, busiest_stage_tasks
+):
+    """A one-file input must not pack the quadratic pair stage into one
+    task (AQE sizes partitions by input bytes, not by pair work), and
+    the pair output still lands in one parquet file."""
+    import glob
+
+    from biokg_spark.operators.dedup import embedding_near_dup_pairs
+
+    # one sign bucket (first four components positive): ~80k candidates
+    rows = [
+        (i, [1.0 + (i * 7 + j * 13) % 29 for j in range(16)]) for i in range(400)
+    ]
+    rows += [(1000 + i, rows[i][1]) for i in range(5)]  # planted copies
+    src = str(tmp_path / "emb")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(
+        1
+    ).write.parquet(src)
+    df = spark.read.parquet(src)
+    assert df.rdd.getNumPartitions() == 1
+    out = str(tmp_path / "pairs")
+    tasks = busiest_stage_tasks(
+        lambda: embedding_near_dup_pairs(df, threshold=0.999).write.parquet(out)
+    )
+    assert tasks >= spark.sparkContext.defaultParallelism
+    assert len(glob.glob(f"{out}/*.parquet")) == 1
+    got = {(r.id_a, r.id_b) for r in spark.read.parquet(out).collect()}
+    assert {(i, 1000 + i) for i in range(5)} <= got

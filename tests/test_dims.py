@@ -42,6 +42,23 @@ def test_local_df_matches_createdataframe(spark):
     assert a == b
 
 
+def test_local_df_round_trips_escapes_and_special_floats(spark):
+    """Backslashes survive Spark SQL's escape processing, and NaN, ±inf
+    and -0.0 come back as themselves, not as column names or 0.0."""
+    rows = [
+        ("a\tb", 1.5),
+        ("trailing\\", float("nan")),
+        ("it's \\'quoted\\\\", float("inf")),
+        ("\\n stays two chars", float("-inf")),
+        ("x", -0.0),
+    ]
+    schema = "s string, d double"
+    # NaN != NaN, so compare the rows' reprs
+    a = sorted(map(repr, map(tuple, local_df(spark, rows, schema).collect())))
+    b = sorted(map(repr, map(tuple, spark.createDataFrame(rows, schema).collect())))
+    assert a == b == sorted(map(repr, rows))
+
+
 def test_scan_mentions_sql_list_equals_dataframe_lexicon(spark):
     """The list fast path (no collect job) must produce exactly the
     DataFrame path's rows."""

@@ -1,14 +1,17 @@
-"""Property-based tests (hypothesis) for the pure-Python kernels.
+"""Property-based tests (hypothesis).
 
-These run without Spark: the MentionScanner backends and the cascade
-extractor are plain objects, so hypothesis can hammer them cheaply.
+The MentionScanner backends and the cascade extractor are plain
+objects, so hypothesis hammers them cheaply without Spark. The dedup
+pair joins run on the test session with few examples.
 """
 
 from __future__ import annotations
 
+import math
 import re
+from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import given, settings
+from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
 from biokg_spark.functions.cascade import CascadeExtractor
@@ -73,3 +76,97 @@ def test_cascade_first_match_invariant(text):
         # every earlier pattern must NOT match anywhere in the string
         for i in range(idx):
             assert ex._rx()[i].search(text) is None
+
+
+# -- dedup pair joins ----------------------------------------------------
+
+# halves are exact in float32, so the brute force sees the stored values
+COMPONENT = st.integers(-4, 4).map(lambda x: x / 2)
+
+
+@st.composite
+def embedding_sets(draw):
+    """(vec_id, vector) rows: random vectors, a hot group sharing one
+    sign bucket (first four components positive) and mostly one
+    k-means cluster, and planted exact and scaled copies."""
+    dim = draw(st.integers(4, 6))
+    nonzero = st.lists(COMPONENT, min_size=dim, max_size=dim).filter(any)
+    vecs = draw(st.lists(nonzero, min_size=6, max_size=16))
+    hot = st.lists(st.integers(2, 4).map(float), min_size=dim, max_size=dim)
+    vecs += draw(st.lists(hot, max_size=16))
+    for i in draw(st.lists(st.integers(0, len(vecs) - 1), max_size=6)):
+        vecs.append(list(vecs[i]))
+    for i in draw(st.lists(st.integers(0, len(vecs) - 1), max_size=3)):
+        vecs.append([2 * x for x in vecs[i]])
+    ids = draw(st.permutations(range(len(vecs))))
+    return [(3 * i, v) for i, v in zip(ids, vecs)]
+
+
+def _cosine(a, b) -> float:
+    """similarity.cosine_similarity in pure Python: the same sequential
+    double sums, then Spark's round (HALF_UP on the decimal string)."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    sim = dot / (math.sqrt(na) * math.sqrt(nb))
+    return float(Decimal(repr(sim)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+# Spark-backed examples take seconds each: run few and report a failing
+# example unshrunk, since shrinking would rerun the jobs hundreds of times
+SPARK_SETTINGS = settings(
+    max_examples=6,
+    deadline=None,
+    phases=(Phase.explicit, Phase.reuse, Phase.generate),
+)
+
+
+def _partitionings(spark, rows):
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return df.coalesce(1), df.repartition(7)
+
+
+@SPARK_SETTINGS
+@given(embedding_sets())
+def test_embedding_near_dup_pairs_match_brute_force(spark, rows):
+    from biokg_spark.operators.dedup import embedding_near_dup_pairs
+
+    one, seven = (
+        sorted(map(tuple, embedding_near_dup_pairs(df, threshold=0.999).collect()))
+        for df in _partitionings(spark, rows)
+    )
+    expect = sorted(
+        (x[0], y[0], sim)
+        for x in rows
+        for y in rows
+        if x[0] < y[0]
+        and [c > 0 for c in x[1][:4]] == [c > 0 for c in y[1][:4]]
+        and (sim := _cosine(x[1], y[1])) >= 0.999
+    )
+    assert one == seven == expect
+
+
+@SPARK_SETTINGS
+@given(embedding_sets())
+def test_semantic_dedup_matches_brute_force(spark, rows):
+    from biokg_spark.operators.clustering import kmeans_assign, semantic_dedup
+
+    one, seven = (
+        sorted(map(tuple, semantic_dedup(df, k=3, threshold=0.999).collect()))
+        for df in _partitionings(spark, rows)
+    )
+    assign = {
+        r.vec_id: (r.cluster, r.dist_u6)
+        for r in kmeans_assign(_partitionings(spark, rows)[0], k=3).collect()
+    }
+    vec = dict(rows)
+    losers = set()
+    for a in vec:
+        for b in vec:
+            (ca, da), (cb, db) = assign[a], assign[b]
+            if a < b and ca == cb and _cosine(vec[a], vec[b]) >= 0.999:
+                losers.add(a if da < db else b if db < da else max(a, b))
+    expect = sorted((i, assign[i][0], i not in losers) for i in vec)
+    assert one == seven == expect
