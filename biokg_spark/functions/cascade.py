@@ -7,140 +7,22 @@ the loop breaks (reference: biokg/processing/parsers.py:24-45 patterns,
 break at :976). Order sensitivity is the whole contract — a later pattern
 must never fire when an earlier one matches.
 
-Two implementations with identical semantics:
+Three forms of that one cascade, generated from the same pattern and map
+tables and each with its own caller:
 
-- ``cascade_column``: a ``coalesce(regexp_extract(p1), …)`` chain — pure
-  JVM columns, right when the cascade is small and only one capture is
-  needed.
-- ``CascadeExtractor`` + ``extract_cascade``: vectorized pandas UDF for
-  the full shape — named groups, per-pattern extraction of several
-  fields, normalization maps applied to the captures, first-match-wins
-  per input string. This is the §2.9 rebuild form of the reference
-  kernel.
+- ``ddi_side_effects``: the row kernel. The KG pipeline runs it inside
+  its Arrow fact extractor (``KGPipeline._extract_facts``).
+- ``ddi_effects_column``: a pure Column/JVM chain, run by the
+  ``ddi_cascade_effects`` registry query.
+- ``ddi_effects_sql``: the DuckDB twin, that query's oracle.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-
-
-def cascade_column(col: Column | str, patterns: list[tuple[str, str]]) -> Column:
-    """First-match-wins label from ordered (pattern, label) pairs.
-
-    NULL when nothing matches. Pure-column form: Catalyst folds it into
-    whole-stage codegen; use for small cascades with scalar output.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    branches = [F.when(c.rlike(pat), F.lit(label)) for pat, label in patterns]
-    return F.coalesce(*branches, F.lit(None).cast("string"))
-
-
-class CascadeExtractor:
-    """Serializable ordered-cascade kernel (compiled lazily per executor).
-
-    ``patterns``: ordered regexes with named groups. ``fields``: output
-    column → group name. ``norm_maps``: per-field value normalization
-    (reference: the mode map parsers.py:47-58 and name aliases :60-82);
-    unmapped values pass through. First pattern with a match wins; within
-    a string only the FIRST occurrence is extracted (the reference's
-    ``re.search`` + break).
-    """
-
-    def __init__(
-        self,
-        patterns: list[str],
-        fields: dict[str, str],
-        norm_maps: dict[str, dict[str, str]] | None = None,
-    ):
-        self.patterns = patterns
-        self.fields = fields
-        self.norm_maps = norm_maps or {}
-        self._compiled: list[re.Pattern] | None = None
-
-    def _rx(self) -> list[re.Pattern]:
-        if self._compiled is None:
-            self._compiled = [re.compile(p, re.IGNORECASE) for p in self.patterns]
-        return self._compiled
-
-    def extract_one(self, text: str) -> tuple | None:
-        if not text:
-            return None
-        for i, rx in enumerate(self._rx()):
-            m = rx.search(text)
-            if m is None:
-                continue
-            groups = m.groupdict()
-            out = []
-            for field, group in self.fields.items():
-                v = groups.get(group)
-                if v is not None:
-                    v = v.strip().lower()
-                    v = self.norm_maps.get(field, {}).get(v, v)
-                out.append(v)
-            return (i,) + tuple(out)  # pattern index = provenance
-        return None
-
-
-def extract_cascade(
-    df: DataFrame,
-    extractor: CascadeExtractor,
-    text_col: str = "text",
-    keys: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
-    """Run the cascade over ``df[text_col]`` → one row per matching input.
-
-    Output: keys + ``pattern_idx`` (which pattern won) + the extractor's
-    fields. Non-matching rows are dropped (the reference emits nothing
-    for them).
-    """
-    key_fields = [df.schema[k] for k in keys]
-    schema = StructType(
-        key_fields
-        + [StructField("pattern_idx", StringType())]
-        + [StructField(name, StringType()) for name in extractor.fields]
-    )
-    keys_l = list(keys)
-    field_names = list(extractor.fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            key_vals = pdf[keys_l].itertuples(index=False, name=None)
-            for kv, text in zip(key_vals, pdf[text_col].tolist()):
-                hit = extractor.extract_one(text)
-                if hit is not None:
-                    rows.append(kv + (str(hit[0]),) + hit[1:])
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=keys_l + ["pattern_idx"] + field_names
-                )
-
-    return df.select(*keys_l, text_col).mapInPandas(run, schema=schema)
-
-
-# The reference's DDI cascade, reduced to its structure (three exemplar
-# patterns with named groups + the mode-normalization map; the full
-# 15-pattern set drops in verbatim the same way).
-DDI_PATTERNS = [
-    r"the (?P<mode>risk or severity) of (?P<se>[\w\s]+?) can be (?P<dir>increased|decreased) when",
-    r"(?P<dir>increase|decrease) the (?P<mode>serum concentration) of (?P<se>[\w\s]+?)(?:\.|,|$)",
-    r"may (?P<dir>increase|decrease) (?P<se>[\w\s]+?) activities",
-]
-DDI_FIELDS = {"side_effect": "se", "mode": "mode", "direction": "dir"}
-DDI_NORM = {
-    "direction": {"increase": "increased", "decrease": "decreased"},
-    "mode": {"risk or severity": "risk"},
-}
-
-
-def ddi_cascade() -> CascadeExtractor:
-    return CascadeExtractor(DDI_PATTERNS, DDI_FIELDS, DDI_NORM)
 
 
 # ---------------------------------------------------------------------------
@@ -167,9 +49,10 @@ def ddi_cascade() -> CascadeExtractor:
 #      (:971-974).
 #
 # Two executions with identical output, differentially tested:
-#   - ddi_side_effects(): the row kernel (drives the mapInPandas form);
-#   - ddi_effects_column(): pure Column/JVM chain — what the KG pipeline
-#     uses at scale (whole-stage codegen, no Python in the hot path).
+#   - ddi_side_effects(): the row kernel, run by the KG pipeline's Arrow
+#     fact extractor;
+#   - ddi_effects_column(): pure Column/JVM chain (whole-stage codegen),
+#     run by the ddi_cascade_effects registry query.
 
 # Each entry: (pattern with python-style named groups). The column/SQL
 # forms are derived mechanically below (named groups -> numbered).
@@ -313,7 +196,7 @@ def ddi_effects_column(col: Column | str) -> Column:
     """Pure-Column cascade: struct<pattern_idx:int, effects:array<string>>.
 
     NULL when no pattern matches or the mode is unmapped. Entirely
-    JVM-side — the form the KG pipeline runs at 10^12-turn scale;
+    JVM-side — the ``ddi_cascade_effects`` registry query runs it;
     differentially tested against ``ddi_side_effects`` row-for-row.
 
     Two plan-shape defenses (Catalyst inlines referenced subexpressions,

@@ -210,7 +210,7 @@ def trigram_dup_count(col: Column | str) -> Column:
     (Catalyst), re-running the split for every ``element_at`` — O(n²)
     splits per row, measured as a single-core multi-minute stall on
     5k documents of ~500 tokens. Lambda variables bind exactly once.
-    Same hazard family as functions/cascade.py:319-331."""
+    Same hazard family as functions/cascade.py ddi_effects_column."""
 
     def over_trigrams(tri: Column) -> Column:
         return F.size(tri) - F.size(F.array_distinct(tri))

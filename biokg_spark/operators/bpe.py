@@ -169,10 +169,9 @@ def bpe_encode(
 
     Scale shape: the compiled chain is 2×n_merges literal (non-regex)
     replaces — a single narrow whole-stage-codegen pass over the
-    corpus, zero shuffles. Catalyst handles hundreds of merges; for a
-    production 50k-merge vocabulary the chain outgrows codegen —
-    use :func:`bpe_encode_arrow` (same contract, Arrow-batched) for
-    that regime. The final working string feeds three output columns,
+    corpus, zero shuffles. Catalyst handles hundreds of merges; a
+    production 50k-merge vocabulary would outgrow codegen, and no caller
+    runs one. The final working string feeds three output columns,
     so it is let-bound (packed struct + separate unpack Project) —
     otherwise the whole replace chain re-inlines per reference.
     """
@@ -207,64 +206,6 @@ def bpe_encode(
         F.col("_o.n_bpe").alias("n_bpe"),
         F.col("_o.enc_fp").alias("enc_fp"),
     )
-
-
-def bpe_encode_arrow(
-    docs: DataFrame,
-    merges: DataFrame,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Arrow-batched twin of :func:`bpe_encode` for vocab-scale merge
-    tables (50k+ merges outgrow a compiled Column chain).
-
-    Same double-pass fusion contract per rank, executed in Python over
-    Arrow record batches (``mapInPandas``); the merge list rides the
-    closure (broadcast by Spark's task serializer — a tokenizer model
-    is a few MB). Output-identical to ``bpe_encode`` (parity pinned in
-    tests, including the odd self-run edge the contract documents).
-    Narrow transformation: zero shuffles, scales with executor count.
-    """
-    rules = [
-        (f" {r.pair} ", f" {r.merged} ")
-        for r in sorted(merges.collect(), key=lambda r: r.merge_rank)
-    ]
-    schema = f"{id_col} long, n_ws long, n_bpe long, enc_fp string"
-
-    def encode_batches(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            out_id, out_ws, out_bpe, out_fp = [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[text_col]):
-                if raw is None:
-                    # bpe_encode's Column chain propagates NULL text to
-                    # NULL outputs; str(None) would tokenize as 'none'
-                    # (ADVICE r5 parity edge)
-                    out_id.append(i)
-                    out_ws.append(None)
-                    out_bpe.append(None)
-                    out_fp.append(None)
-                    continue
-                toks = str(raw).lower().strip().split()
-                s = " " + " ".join(toks) + " "
-                for pat, rep in rules:
-                    s = s.replace(pat, rep).replace(pat, rep)
-                enc = s.strip()
-                out_id.append(i)
-                # Spark's split('', '\\s+') yields [''] (size 1), while
-                # Python ''.split() yields [] — pin the Spark semantics
-                # for empty/whitespace-only text (ADVICE r5)
-                out_ws.append(len(toks) or 1)
-                out_bpe.append(len(enc.split(" ")))
-                out_fp.append(hashlib.md5(enc.encode()).hexdigest())
-            yield pd.DataFrame(
-                {id_col: out_id, "n_ws": out_ws, "n_bpe": out_bpe, "enc_fp": out_fp}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(encode_batches, schema)
 
 
 def bpe_encode_oracle_sql(n_merges: int, source_sql: str = "documents") -> str:

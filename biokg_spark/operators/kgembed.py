@@ -69,10 +69,6 @@ def _init_val(kind, id_col, j_col):
     )
 
 
-def _vcols(dim: int) -> list[str]:
-    return [f"v{j}" for j in range(dim)]
-
-
 def _stack_long(wide: DataFrame, dim: int) -> DataFrame:
     """(kind, id, v0..v{dim-1}) → the public long form (kind, id, j, val)."""
     stack = "stack({}, {}) as (j, val)".format(

@@ -8,7 +8,7 @@ one record at a time in pure Python; here the lexicon is broadcast once,
 an automaton/compiled regex is built once per executor, and text flows
 through ``mapInPandas`` in Arrow record batches.
 
-Matching semantics (shared by both backends, and by the DuckDB oracle SQL
+Matching semantics (shared by every scan kernel, and by the DuckDB oracle SQL
 in ``__spark_entry__.py``):
 - case-insensitive, word-boundary anchored (a surface matches only when
   not flanked by ``[A-Za-z0-9_]``);
@@ -246,8 +246,8 @@ def scan_mentions_sql(
     callers whose lexicon already lives in the driver (module-literal
     dims) pass the list and skip the collect job entirely.
 
-    Raises if the lexicon contains multi-token surfaces — those need the
-    regex/AC backend (use backend='regex' in ``scan_mentions``).
+    Raises if the lexicon contains multi-token surfaces — those need
+    ``scan_mentions`` (automaton kernel) or ``scan_mentions_join``.
     """
     if isinstance(lexicon, list):
         lex_rows = list(lexicon)
@@ -262,7 +262,7 @@ def scan_mentions_sql(
     if any(_SPLIT_RX.search(s) for s in resolved):
         raise ValueError(
             "scan_mentions_sql requires single-token surfaces; "
-            "use backend='regex' for multi-word lexicons"
+            "use scan_mentions or scan_mentions_join for multi-word lexicons"
         )
     spark = df.sparkSession
     lex_df = F.broadcast(
@@ -304,10 +304,10 @@ def scan_mentions_join(
     """Lexicon-JOIN mention scan: multi-token surfaces, ZERO driver
     materialization of the lexicon (r3 verdict item 6).
 
-    Every other backend collects the lexicon driver-side before
+    The other scans collect the lexicon driver-side before
     broadcasting — correct for curated dims (measured to 10^6 surfaces,
     SCALE.md) but impossible at a 10^7..10^8-row derived lexicon. This
-    backend keeps the lexicon distributed end-to-end:
+    scan keeps the lexicon distributed end-to-end:
 
     1. lexicon side: normalize each surface to its word-token sequence
        (lowercased, split on non-word runs) and resolve the priority
@@ -450,31 +450,23 @@ def scan_mentions(
     lexicon: DataFrame,
     text_col: str = "text",
     keys: tuple[str, ...] = ("conv_id", "turn_idx"),
-    backend: str = "auto",
 ) -> DataFrame:
     """Scan ``df[text_col]`` for lexicon surfaces → mention rows.
 
     Output: ``keys + (surface, entity_id, entity_type, span_start)``.
 
-    Backend guidance (measured on 750k 40-word turns, local[8]):
-    - ``'auto'`` (default): picks 'dict' for single-token lexicons, 'ac'
-      otherwise.
-    - ``'dict'``: C-level tokenizer + hash probe per token — lexicon-size
-      independent, fastest (4.4 s; 12.7 µs/text at a 20k-surface lexicon
-      vs 33.6 µs for the automaton). Single-token surfaces only.
-    - ``'ac'``: Aho-Corasick automaton built once per executor — linear in
-      text length regardless of lexicon size; handles multi-word surfaces
-      (the north-star kernel; 6.0 s at 147 surfaces).
-    - ``'regex'``: compiled alternation; fine for tiny lexicons but
-      degrades linearly with lexicon size (157 s at 20k surfaces) — kept
-      for span-exactness cross-checks.
-    - ``'sql'``: pure-JVM tokenize+broadcast-join, single-token surfaces
-      only; zero Python in the plan (lexicon still collected driver-side
-      for priority resolution).
-    - ``'join'``: pure-JVM positioned n-gram join — multi-token surfaces
-      AND no driver materialization of the lexicon at all; the backend
-      for derived lexicons beyond dim scale (10^7+ surfaces). See
-      ``scan_mentions_join``.
+    The kernel follows from the lexicon (measured on 750k 40-word turns,
+    local[8]):
+    - single-token surfaces: ``'dict'`` — C-level tokenizer + hash probe
+      per token, lexicon-size independent (4.4 s; 12.7 µs/text at a
+      20k-surface lexicon vs 33.6 µs for the automaton);
+    - otherwise ``'ac'``: Aho-Corasick automaton built once per executor
+      — linear in text length regardless of lexicon size, handles
+      multi-word surfaces (6.0 s at 147 surfaces).
+
+    The JVM-only scans are separate entry points: ``scan_mentions_sql``
+    (single-token, no Python in the plan) and ``scan_mentions_join``
+    (multi-token, the lexicon never leaves the executors).
 
     Every Arrow batch is scanned as one concatenated string (`\\x00`
     separators preserve boundary semantics); hits map back to rows by
@@ -487,17 +479,12 @@ def scan_mentions(
     itself is rebuilt once per executor process from the broadcast value
     and cached (automaton/dict construction is one-time per executor).
     """
-    if backend == "sql":
-        return scan_mentions_sql(df, lexicon, text_col, keys)
-    if backend == "join":
-        return scan_mentions_join(df, lexicon, text_col, keys)
     lex_rows = [
         (r["surface"], r["entity_id"], r["entity_type"], r["priority"])
         for r in lexicon.select("surface", "entity_id", "entity_type", "priority").collect()
     ]
-    # driver-side construction validates backend/surface constraints
-    # eagerly (raises here, not inside a task) and resolves 'auto'
-    scanner = MentionScanner(lex_rows, backend=backend)
+    # driver-side construction picks the kernel from the lexicon
+    scanner = MentionScanner(lex_rows, backend="auto")
     bc = df.sparkSession.sparkContext.broadcast(lex_rows)
     resolved_backend = scanner.backend
     import hashlib

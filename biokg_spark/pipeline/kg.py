@@ -53,7 +53,6 @@ import sys
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biokg_spark.functions.cascade import cascade_column, ddi_effects_column
 from biokg_spark.functions.dims import local_df
 from biokg_spark.operators.mentions import scan_mentions
 from biokg_spark.operators.skew import salted_collect_set
@@ -229,7 +228,8 @@ def links_from_entity_sets(
     # column reads inside codegen) runs the same stage in ~7 s. A
     # transform()-let-bound variant was also tried: 46 s — higher-order
     # functions are interpreted per row, worse than the inlined chain.
-    # Same plan-shape hazard family as functions/cascade.py:319-331.
+    # Same plan-shape hazard family as functions/cascade.py
+    # ddi_effects_column.
     dim_rows = []
     for (ta, tb), (pname, und) in LINK_PREDICATES.items():
         dim_rows.append((ta, tb, pname, und, True))
@@ -496,11 +496,9 @@ class KGPipeline:
         lexicon: DataFrame,
         id_mapping: DataFrame | None = None,
         ontology: DataFrame | None = None,
-        scanner_backend: str = "auto",
         buckets: int = 32,
         canonicalizer: str = "mapping",
         disambiguation: str = "priority",
-        extractor_backend: str = "arrow",
     ):
         """``canonicalizer``: 'mapping' uses the curated ``id_mapping`` dim
         (the reference's biodblinker analog, J3); 'lsh' DERIVES the mapping
@@ -520,18 +518,14 @@ class KGPipeline:
             raise ValueError(f"unknown disambiguation {disambiguation!r}")
         if canonicalizer == "mapping" and id_mapping is None:
             raise ValueError("canonicalizer='mapping' requires id_mapping")
-        if extractor_backend not in ("arrow", "column"):
-            raise ValueError(f"unknown extractor_backend {extractor_backend!r}")
         self.spark = spark
         self.ckpt = CheckpointManager(spark, workdir)
         self.lexicon = lexicon
         self.id_mapping = id_mapping
         self.ontology = ontology
-        self.scanner_backend = scanner_backend
         self.buckets = buckets
         self.canonicalizer = canonicalizer
         self.disambiguation = disambiguation
-        self.extractor_backend = extractor_backend
         self._onto_ck: DataFrame | None = None
 
     # (session id, ontology plan id) -> lineage-truncated dim. Module
@@ -612,7 +606,7 @@ class KGPipeline:
         # concurrently with the mentions→linked→turn_sets chain (similar
         # wall: the two scans of the same bucketed input overlap instead
         # of serializing; measured ~15 s hidden at local[8]/3M turns).
-        fp1b = fingerprint("extracted", fp0, self.extractor_backend)
+        fp1b = fingerprint("extracted", fp0)
         extract_pool = ThreadPoolExecutor(max_workers=2)
         extracted_fut = extract_pool.submit(
             self.ckpt.run, "extracted", fp1b, lambda: self._extract_facts(ingested)
@@ -630,9 +624,7 @@ class KGPipeline:
         early_pool = None
         early_futs: dict = {}
         try:
-            fp1 = fingerprint(
-                "mentions", fp0, self.scanner_backend, self.disambiguation
-            )
+            fp1 = fingerprint("mentions", fp0, self.disambiguation)
             mentions = self.ckpt.run("mentions", fp1, lambda: self._mentions(ingested))
 
             # linked is a broadcast-join VIEW over the mentions checkpoint
@@ -826,7 +818,6 @@ class KGPipeline:
             self.lexicon,
             text_col="text",
             keys=("conv_id", "turn_idx"),
-            backend=self.scanner_backend,
         )
         if self.disambiguation == "priority":
             return raw
@@ -924,57 +915,14 @@ class KGPipeline:
         least one hit and carries no text — the families never touch the
         wide column again.
 
-        Default backend is the Arrow kernel (``_extract_facts_arrow``):
-        on this class of allocation-heavy regex work, measured at 9M
-        turns, the Catalyst expression chain runs 109.7 s → 42.5 s from 2
-        to 8 pinned cores (2.6×: the JVM form hits an allocation/bandwidth
-        wall) while CPython's sre kernel is both ~4× faster per row and
-        scales at 0.97 — same finding as the mention scanner. The Column
-        form (``extractor_backend='column'``) stays available and is
-        differentially tested; the oracle query ``ddi_cascade_effects``
-        exercises it against a generated DuckDB twin."""
-        if self.extractor_backend == "arrow":
-            return self._extract_facts_arrow(ingested)
-        # Literal guards make every regex lazy: a capture-group extract
-        # re-runs its regex per group (the phos statement has 5), so a
-        # cheap substring probe per extractor keeps non-matching rows —
-        # the vast majority — regex-free. CASE WHEN is lazily evaluated.
-        t = F.col("text")
-        g = lambda i: F.regexp_extract("text", PHOS_RX, i)  # noqa: E731
-        cues = [(pat, f"{rel}|{act}") for pat, rel, act in ACTION_CUES]
-        empty = F.lit("")
-        has_phos = t.contains(" phosphorylates ")
-        has_expr = t.contains(" expression in ")
-        has_pm = t.contains("PubMed=")
-        ex = ingested.select(
-            "conv_id",
-            "turn_idx",
-            ddi_effects_column("text").alias("ddi"),
-            cascade_column("text", cues).alias("ra"),
-            F.when(
-                has_pm,
-                F.array_join(F.regexp_extract_all("text", F.lit(PUBMED_RX), 1), ","),
-            ).otherwise(empty).alias("ref_string"),
-            F.when(has_expr, F.regexp_extract("text", EXPRESSION_RX, 1))
-            .otherwise(empty).alias("tissue"),
-            F.when(has_expr, F.upper(F.regexp_extract("text", EXPRESSION_RX, 2)))
-            .otherwise(empty).alias("level"),
-            F.when(has_phos, F.lower(g(1))).otherwise(empty).alias("kin_surface"),
-            F.when(has_phos, g(2)).otherwise(empty).alias("kin_organism"),
-            F.when(has_phos, F.lower(g(3))).otherwise(empty).alias("sub_surface"),
-            F.when(has_phos, g(4)).otherwise(empty).alias("sub_organism"),
-            F.when(has_phos, g(5)).otherwise(empty).alias("site"),
-        )
-        return ex.where(
-            F.col("ddi").isNotNull()
-            | F.col("ra").isNotNull()
-            | (F.col("tissue") != "")
-            | (F.col("kin_surface") != "")
-        )
-
-    def _extract_facts_arrow(self, ingested: DataFrame) -> DataFrame:
-        """Arrow-batched extraction kernel — identical output contract to
-        the Column form (schema, ''-for-miss conventions, row set)."""
+        The kernel is Arrow-batched CPython regex: on this class of
+        allocation-heavy regex work, measured at 9M turns, a Catalyst
+        expression chain ran 109.7 s → 42.5 s from 2 to 8 pinned cores
+        (2.6×: the JVM form hits an allocation/bandwidth wall) while
+        CPython's sre kernel is both ~4× faster per row and scales at 0.97
+        — same finding as the mention scanner. The DDI step is
+        ``ddi_side_effects``; its JVM twin ``ddi_effects_column`` serves
+        the ``ddi_cascade_effects`` registry query."""
         from collections.abc import Iterator
 
         import pandas as pd
@@ -1064,9 +1012,9 @@ class KGPipeline:
     def _effect_quads(self, turn_sets: DataFrame, extracted: DataFrame) -> DataFrame:
         """DDI side-effect extraction over interaction descriptions via the
         FULL 15-pattern first-match-wins cascade (reference:
-        parsers.py:24-45 + :927-977), run entirely JVM-side
-        (``ddi_effects_column``); one description can yield several
-        effects ('x, and y'-lists, excretion-rate appends).
+        parsers.py:24-45 + :927-977), run by ``ddi_side_effects`` inside
+        the Arrow fact extractor (``_extract_facts``); one description can
+        yield several effects ('x, and y'-lists, excretion-rate appends).
 
         Plan notes (10^12-turn discipline): per-turn drug sets derive from
         the SHARED turn_sets aggregation (no second shuffle of the mention

@@ -2776,9 +2776,10 @@ def _ddi_sentence_sql() -> str:
     """,
 )
 def ddi_cascade_effects(spark, sf_dir):
-    """Ordered 15-pattern regex cascade, pure-Column/JVM form — the exact
-    kernel the KG pipeline's quads stage runs (pipeline/kg.py), applied to
-    deterministic reference-shaped sentences (reference:
+    """Ordered 15-pattern regex cascade, pure-Column/JVM form — the JVM
+    twin of the row kernel the KG pipeline's fact extractor runs
+    (``ddi_side_effects``), applied to deterministic reference-shaped
+    sentences (reference:
     parsers.py:927-977 first-match-wins with alias maps)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", _ddi_sentence_col().alias("sentence")

@@ -34,7 +34,6 @@ def incremental_mentions(
     lexicon: DataFrame,
     out_path: str,
     checkpoint_path: str,
-    backend: str = "ac",
 ) -> StreamingQuery:
     """Stream transcript turns → mention rows appended to ``out_path``.
 
@@ -69,7 +68,7 @@ def incremental_mentions(
             )
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        mentions = scan_mentions(batch_df, lexicon, backend=backend)
+        mentions = scan_mentions(batch_df, lexicon)
         mentions.write.mode("overwrite").parquet(
             f"{out_path}/batch_id={batch_id}"
         )

@@ -1,66 +1,6 @@
-from pyspark.sql import functions as F
+"""Full reference DDI side-effect cascade (parsers.py:24-82, :927-977)."""
 
 from biokg_spark.functions.cascade import (
-    CascadeExtractor,
-    cascade_column,
-    ddi_cascade,
-    extract_cascade,
-)
-
-
-def test_cascade_column_order_sensitivity(spark):
-    pats = [(r"\bincreases\b", "INC"), (r"\bin\b", "IN")]
-    df = spark.createDataFrame(
-        [("x increases y in z",), ("only in here",), ("nothing",)], "t string"
-    )
-    got = [r.l for r in df.select(cascade_column("t", pats).alias("l")).collect()]
-    # first pattern wins even though the second also matches
-    assert got == ["INC", "IN", None]
-
-
-def test_extractor_first_match_wins_and_break():
-    ex = ddi_cascade()
-    hit = ex.extract_one(
-        "The risk or severity of bleeding can be increased when combined"
-    )
-    assert hit == (0, "bleeding", "risk", "increased")  # mode normalized
-    # second pattern only fires when the first does not match
-    hit2 = ex.extract_one("will increase the serum concentration of warfarin.")
-    assert hit2 == (1, "warfarin", "serum concentration", "increased")
-    assert ex.extract_one("") is None
-    assert ex.extract_one("no relation cues at all") is None
-
-
-def test_extractor_norm_maps():
-    ex = CascadeExtractor(
-        [r"(?P<v>cat|dog)"], {"animal": "v"}, {"animal": {"cat": "feline"}}
-    )
-    assert ex.extract_one("a CAT here") == (0, "feline")
-    assert ex.extract_one("a dog here") == (0, "dog")  # unmapped passes through
-
-
-def test_extract_cascade_dataframe(spark):
-    df = spark.createDataFrame(
-        [
-            ("c0", 0, "The risk or severity of rash can be increased when x"),
-            ("c0", 1, "may decrease analgesic activities"),
-            ("c1", 0, "irrelevant text"),
-        ],
-        "conv_id string, turn_idx int, text string",
-    ).repartition(3)
-    out = extract_cascade(df, ddi_cascade())
-    rows = {(r.conv_id, r.turn_idx): r for r in out.collect()}
-    assert set(rows) == {("c0", 0), ("c0", 1)}  # non-matching row dropped
-    assert rows[("c0", 0)].side_effect == "rash"
-    assert rows[("c0", 0)].mode == "risk"
-    assert rows[("c0", 1)].direction == "decreased"
-    assert rows[("c0", 1)].pattern_idx == "2"
-
-
-# ---------------------------------------------------------------------------
-# Full reference DDI side-effect cascade (parsers.py:24-82, :927-977)
-
-from biokg_spark.functions.cascade import (  # noqa: E402
     DDI_SE_PATTERNS,
     ddi_effects_column,
     ddi_side_effects,

@@ -1,8 +1,16 @@
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
-from biokg_spark.operators.mentions import AhoCorasick, MentionScanner, scan_mentions
+from biokg_spark.operators.mentions import (
+    AhoCorasick,
+    MentionScanner,
+    scan_mentions,
+    scan_mentions_join,
+    scan_mentions_sql,
+)
 
 LEX = [
     ("aspirin", "DB001", "DRUG", 0),
@@ -11,6 +19,35 @@ LEX = [
     ("ambig", "P999", "PROTEIN", 1),
     ("ambig", "DB999", "DRUG", 0),  # lower priority wins
 ]
+
+
+MULTISET_COLS = ["conv_id", "turn_idx", "surface", "entity_id", "entity_type"]
+
+
+def _multiset(df):
+    """(keys, surface, entity) multiset of a Spark mention frame."""
+    return Counter(tuple(r) for r in df.select(*MULTISET_COLS).collect())
+
+
+def _kernel_multiset(lexicon, backend, pdf):
+    """The same multiset from one MentionScanner kernel run on pandas."""
+    out = MentionScanner(_lex_rows(lexicon), backend=backend).scan_frame(
+        pdf, "text", ["conv_id", "turn_idx"]
+    )
+    return Counter(
+        (c, int(t), s, e, ty) for c, t, s, e, ty in out[MULTISET_COLS].itertuples(
+            index=False, name=None
+        )
+    )
+
+
+def _lex_rows(lexicon):
+    return [
+        (r.surface, r.entity_id, r.entity_type, r.priority)
+        for r in lexicon.select(
+            "surface", "entity_id", "entity_type", "priority"
+        ).collect()
+    ]
 
 
 @pytest.mark.parametrize("backend", ["regex", "ac"])
@@ -80,27 +117,22 @@ def test_scan_mentions_dataframe(spark):
 
 
 def test_sql_backend_parity_with_regex(spark):
-    """The pure-JVM tokenize-and-join scan must agree with the regex
-    scanner on (keys, surface, entity) multisets for single-token
-    lexicons (span_start is regex-only)."""
-    from collections import Counter
-
+    """The pure-JVM tokenize-and-join scan must agree with the regex and
+    dict kernels and with ``scan_mentions`` on (keys, surface, entity)
+    multisets for single-token lexicons (span_start is a kernel extra)."""
     from biokg_spark.datagen import entity_lexicon, transcripts
 
     tx = transcripts(spark, n_conversations=30)
     lex = entity_lexicon(spark)
-    cols = ["conv_id", "turn_idx", "surface", "entity_id", "entity_type"]
+    pdf = tx.toPandas()
 
-    def multiset(backend):
-        got = scan_mentions(tx, lex, backend=backend).select(*cols).collect()
-        return Counter(tuple(r) for r in got)
-
-    assert multiset("sql") == multiset("regex") == multiset("dict") == multiset("auto")
+    sql = _multiset(scan_mentions_sql(tx, lex))
+    assert sql == _kernel_multiset(lex, "regex", pdf)
+    assert sql == _kernel_multiset(lex, "dict", pdf)
+    assert sql == _multiset(scan_mentions(tx, lex))
 
 
 def test_sql_backend_rejects_multiword(spark):
-    import pytest
-
     lex = spark.createDataFrame(
         [("two words", "E1", "T", 0)],
         "surface string, entity_id string, entity_type string, priority int",
@@ -108,12 +140,12 @@ def test_sql_backend_rejects_multiword(spark):
     df = spark.createDataFrame([("c", 0, "x two words y")],
                                "conv_id string, turn_idx int, text string")
     with pytest.raises(ValueError, match="single-token"):
-        scan_mentions(df, lex, backend="sql")
+        scan_mentions_sql(df, lex)
 
 
 def test_unicode_length_changing_lowercase_offsets(spark):
     """'İ' (U+0130) lowercases to TWO chars ('i' + combining dot); offsets
-    must be computed on the SAME lowered string the backends scan, or
+    must be computed on the SAME lowered string the kernels scan, or
     every match after such a char shifts and row attribution near batch
     boundaries breaks silently."""
     lex = spark.createDataFrame(
@@ -128,16 +160,25 @@ def test_unicode_length_changing_lowercase_offsets(spark):
         ],
         "conv_id string, turn_idx int, text string",
     ).coalesce(1)  # one Arrow batch -> all rows share one blob
-    for backend in ("dict", "ac", "regex"):
-        rows = scan_mentions(df, lex, backend=backend).collect()
-        got = sorted((r.turn_idx, r.surface) for r in rows)
-        assert got == [(0, "tp53"), (1, "tp53"), (2, "tp53"), (2, "tp53")], backend
+    pdf = df.toPandas()  # the kernels scan one frame as one blob too
+    runs = {
+        backend: list(
+            MentionScanner(_lex_rows(lex), backend=backend)
+            .scan_frame(pdf, "text", ["conv_id", "turn_idx"])
+            .itertuples(index=False)
+        )
+        for backend in ("dict", "ac", "regex")
+    }
+    runs["scan_mentions"] = scan_mentions(df, lex).collect()
+    for name, rows in runs.items():
+        got = sorted((int(r.turn_idx), r.surface) for r in rows)
+        assert got == [(0, "tp53"), (1, "tp53"), (2, "tp53"), (2, "tp53")], name
         # span_start indexes into the LOWERCASED text
         for r in rows:
             low = {0: "İİİİİİİİİİ before tp53 here",
                    1: "plain ascii tp53 row",
-                   2: "İstanbul İİİ tp53 and tp53 again"}[r.turn_idx].lower()
-            assert low[r.span_start : r.span_start + 4] == "tp53", backend
+                   2: "İstanbul İİİ tp53 and tp53 again"}[int(r.turn_idx)].lower()
+            assert low[r.span_start : r.span_start + 4] == "tp53", name
 
 
 def test_lexicon_broadcast_executor_cache(spark):
@@ -150,40 +191,29 @@ def test_lexicon_broadcast_executor_cache(spark):
         "surface string, entity_id string, entity_type string, priority int",
     )
     df = spark.createDataFrame([("c", 0, "tp53 x")], "conv_id string, turn_idx int, text string")
-    assert scan_mentions(df, lex, backend="dict").count() == 1
-    assert scan_mentions(df, lex, backend="dict").count() == 1
+    assert scan_mentions(df, lex).count() == 1
+    assert scan_mentions(df, lex).count() == 1
     # local mode shares the process: the cache holds exactly one scanner
-    # per (lexicon fingerprint, backend)
+    # per (lexicon fingerprint, kernel); a single-token lexicon runs 'dict'
     keys = [k for k in M._SCANNER_CACHE if k.endswith("|dict")]
     assert len({k for k in keys}) == len(set(keys))  # sanity
 
 
 def test_join_backend_parity_single_token(spark):
-    """backend='join' agrees with every other backend on single-token
-    lexicons (the common curated-dim case)."""
-    from collections import Counter
-
+    """``scan_mentions_join`` agrees with ``scan_mentions`` (the dict
+    kernel) on single-token lexicons (the common curated-dim case)."""
     from biokg_spark.datagen import entity_lexicon, transcripts
 
     tx = transcripts(spark, n_conversations=30)
     lex = entity_lexicon(spark)
-    cols = ["conv_id", "turn_idx", "surface", "entity_id", "entity_type"]
 
-    def multiset(backend):
-        got = scan_mentions(tx, lex, backend=backend).select(*cols).collect()
-        return Counter(tuple(r) for r in got)
-
-    assert multiset("join") == multiset("dict")
+    assert _multiset(scan_mentions_join(tx, lex)) == _multiset(scan_mentions(tx, lex))
 
 
 def test_join_backend_multiword_parity_with_ac(spark):
-    """backend='join' reproduces the automaton's multi-token semantics —
-    word boundaries, longest-at-start, priority tie-break, overlapping
-    hits at different starts — on space-separated surfaces."""
-    from collections import Counter
-
-    from biokg_spark.operators.mentions import scan_mentions_join
-
+    """``scan_mentions_join`` reproduces the automaton's multi-token
+    semantics — word boundaries, longest-at-start, priority tie-break,
+    overlapping hits at different starts — on space-separated surfaces."""
     lex = spark.createDataFrame(
         [
             ("heat shock protein", "P1", "PROTEIN", 0),
@@ -204,17 +234,10 @@ def test_join_backend_multiword_parity_with_ac(spark):
         ],
         "conv_id string, turn_idx int, text string",
     )
-    cols = ["conv_id", "turn_idx", "surface", "entity_id", "entity_type"]
-
-    got = Counter(
-        tuple(r)
-        for r in scan_mentions_join(df, lex).select(*cols).collect()
-    )
-    want = Counter(
-        tuple(r)
-        for r in scan_mentions(df, lex, backend="ac").select(*cols).collect()
-    )
-    assert got == want
+    got = _multiset(scan_mentions_join(df, lex))
+    # multi-token surfaces: scan_mentions runs the automaton ('ac') kernel
+    assert got == _multiset(scan_mentions(df, lex))
+    assert got == _kernel_multiset(lex, "ac", df.toPandas())
     # and the semantics themselves, pinned: longest wins at pos 0 of turn
     # 0 ("heat shock protein" not "heat shock"), contained surfaces still
     # hit at LATER starts ("shock", "protein"), tie-break picks DB1
@@ -233,8 +256,6 @@ def test_join_backend_huge_lexicon_no_driver_materialization(spark):
     never collected to the driver: the lexicon exists only as a JVM-side
     range expression, and matches come back exact."""
     from pyspark.sql import functions as F
-
-    from biokg_spark.operators.mentions import scan_mentions_join
 
     lex = spark.range(10_000_000).select(
         F.concat(F.lit("ent"), F.col("id").cast("string"), F.lit(" protein")).alias(

@@ -238,29 +238,3 @@ def test_context_disambiguation_mode(spark, tmp_path):
         for r in out2["mentions"].where("surface = 'ambigterm'").collect()
     }
     assert got2 == {("c0", 0): "P00001", ("c0", 1): "P00001"}
-
-
-def test_extractor_backends_identical(spark, fixture_inputs, tmp_path):
-    """The Arrow extraction kernel (default) and the Column form must
-    produce identical quad families — same contract, two engines.
-    (Runs its own pipelines: the module `outputs` fixture's workdir is
-    rewritten by the invalidation test above, so its cached file listings
-    go stale.)"""
-    tx, lex, mp, onto = fixture_inputs
-    out_arrow = KGPipeline(
-        spark, str(tmp_path / "arrowwd"), lex, mp, onto, buckets=4,
-        extractor_backend="arrow",
-    ).run(tx, run_key="cmp")
-    out_col = KGPipeline(
-        spark, str(tmp_path / "colwd"), lex, mp, onto, buckets=4,
-        extractor_backend="column",
-    ).run(tx, run_key="cmp")
-    for family, cols in [
-        ("quads", ("subj", "pred", "obj", "qual")),
-        ("action_quads", ("subj", "pred", "obj", "action", "refs")),
-        ("expr_quads", ("subj", "pred", "obj", "level")),
-        ("phos_quads", ("subj", "pred", "obj", "site", "kin_organism", "sub_organism")),
-    ]:
-        a = {tuple(r[c] for c in cols) for r in out_arrow[family].collect()}
-        b = {tuple(r[c] for c in cols) for r in out_col[family].collect()}
-        assert a == b, family

@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis).
 
-The MentionScanner backends and the cascade extractor are plain
-objects, so hypothesis hammers them cheaply without Spark. The dedup
-pair joins run on the test session with few examples.
+The MentionScanner kernels are plain objects, so hypothesis hammers
+them cheaply without Spark. The dedup pair joins run on the test
+session with few examples.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from decimal import ROUND_HALF_UP, Decimal
 from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
-from biokg_spark.functions.cascade import CascadeExtractor
 from biokg_spark.operators.mentions import MentionScanner
 
 WORD = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
@@ -59,23 +58,6 @@ def test_scan_matches_are_word_bounded_and_longest(text):
                 assert oend < len(low) and re.match(r"[A-Za-z0-9_]", low[oend]), (
                     f"longer surface {other!r} was available at {start}"
                 )
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.text(alphabet="abc XYZ.,", max_size=60))
-def test_cascade_first_match_invariant(text):
-    ex = CascadeExtractor(
-        [r"(?P<v>abc)", r"(?P<v>ab)", r"(?P<v>a)"], {"v": "v"}
-    )
-    hit = ex.extract_one(text)
-    low = text.lower()
-    if hit is None:
-        assert "a" not in low
-    else:
-        idx = hit[0]
-        # every earlier pattern must NOT match anywhere in the string
-        for i in range(idx):
-            assert ex._rx()[i].search(text) is None
 
 
 # -- dedup pair joins ----------------------------------------------------
