@@ -22,26 +22,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from bench import log, make_spark, run_df  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-def log(msg: str) -> None:
-    print(msg, file=sys.stderr, flush=True)
-
-
-def make_spark():
-    from biokg_spark.session import get_spark
-
-    return get_spark(
-        app_name="biokg-bench-extra",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
-
-
-def run_df(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def plan_string(df, mode: str = "formatted") -> str:
@@ -55,7 +39,7 @@ def plan_string(df, mode: str = "formatted") -> str:
 def probe(names: list[str], reps: int) -> None:
     from biokg_spark.queries import REGISTRY
 
-    spark = make_spark()
+    spark = make_spark(CPUS, "biokg-bench-extra")
     spark.read.parquet(os.path.join(SF_DIR, "nation.parquet")).count()  # warm
     out = {}
     for name in names:
@@ -77,7 +61,7 @@ def plans(names: list[str], out_dir: str, suffix: str) -> None:
     from biokg_spark.queries import REGISTRY
 
     os.makedirs(out_dir, exist_ok=True)
-    spark = make_spark()
+    spark = make_spark(CPUS, "biokg-bench-extra")
     for name in names:
         fn, _ = REGISTRY[name]
         p = plan_string(fn(spark, SF_DIR))
@@ -93,7 +77,7 @@ def micro() -> None:
     ONE Arrow-UDF pass cost on this host at local[CPUS]?"""
     from pyspark.sql import functions as F
 
-    spark = make_spark()
+    spark = make_spark(CPUS, "biokg-bench-extra")
     spark.range(10).count()  # warm
 
     def t(label, fn, reps=5):

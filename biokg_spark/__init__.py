@@ -5,7 +5,7 @@ reference pipeline ``dsi-bdi/biokg`` (a single-threaded Python batch
 compiler): parse → map/link → aggregate/dedup → emit, over partitioned
 tables of multi-turn transcripts, plus the data-pipeline operators a
 large-scale training-data system needs (dedup, similarity search, text
-analysis, multimodal plumbing).
+analysis).
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL only; Catalyst does pushdown/pruning/broadcast/AQE.

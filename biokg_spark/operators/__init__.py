@@ -16,11 +16,6 @@ from biokg_spark.operators.edges import (
 )
 from biokg_spark.operators.hierarchy import expand_prefixes
 from biokg_spark.operators.mentions import MentionScanner, scan_mentions
-from biokg_spark.operators.multimodal import (
-    extract_media_features,
-    resize_media,
-    sample_frames,
-)
 from biokg_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
 from biokg_spark.operators.skew import salt_join, salted_collect_set
 from biokg_spark.operators.stanzas import (
@@ -52,7 +47,4 @@ __all__ = [
     "assign_segments",
     "prefix_multiplex",
     "xml_extract_records",
-    "extract_media_features",
-    "resize_media",
-    "sample_frames",
 ]

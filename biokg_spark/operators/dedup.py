@@ -781,26 +781,11 @@ def delta_dedup(
     """
     from biokg_spark.functions.text import doc_fingerprint
 
-    idx = corpus.select(doc_fingerprint(text_col).alias("fingerprint")).distinct()
-    return delta_dedup_against_index(idx, delta, text_col, id_col)
-
-
-def delta_dedup_against_index(
-    index: DataFrame,
-    delta: DataFrame,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """:func:`delta_dedup` with the corpus side ALREADY an index.
-
-    ``index`` is a one-column DataFrame of corpus ``fingerprint``s —
-    the maintained artifact a production pipeline actually keeps (and
-    what the streaming twin reads back from its own kept output), so
-    the corpus text is never rescanned per increment.
-    """
-    from biokg_spark.functions.text import doc_fingerprint
-
-    idx = index.select("fingerprint").distinct().withColumn("_in_corpus", F.lit(True))
+    idx = (
+        corpus.select(doc_fingerprint(text_col).alias("fingerprint"))
+        .distinct()
+        .withColumn("_in_corpus", F.lit(True))
+    )
     d = delta.select(F.col(id_col), doc_fingerprint(text_col).alias("fingerprint"))
     surv = d.groupBy("fingerprint").agg(F.min(id_col).alias("_keep_id"))
     return (

@@ -8,10 +8,10 @@ derived from the SAME md5-prefix hash family the rest of the engine uses
 (walks.py:70 idiom), so:
 
 - the register table is MERGEABLE (max per bucket) across shards, days,
-  and streaming increments — the streaming provenance story made
-  count-distinct mergeable by carrying (triple, conv) state
-  (streaming/ingest.py); HLL bounds that state at m rows per key, which
-  is what survives when the per-key distinct set itself is 10^9;
+  and incremental batches — exact count-distinct can only merge by
+  carrying the per-key distinct set; HLL bounds that state at m rows per
+  key, which is what survives when the per-key distinct set itself is
+  10^9;
 - every step is engine-deterministic: the hash is a 60-bit md5 prefix,
   rho comes from the binary-string length (no float log), the register
   sum is an exact INTEGER aggregate (2^(k+1-rho) terms — order-free),

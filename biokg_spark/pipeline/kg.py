@@ -413,10 +413,9 @@ def provenance_occurrences(
 ) -> DataFrame:
     """Per-occurrence typed edges with provenance columns: one row per
     (turn, emitted edge) carrying (subj, pred, obj, conv_id, ts). The
-    shared pre-aggregation of the batch links_prov family and the
-    streaming incremental state — pairs expand FIRST (array-side,
-    carrying only the two key strings), then the narrow rows join the
-    (conv_id, turn_idx, ts) dim."""
+    pre-aggregation of the links_prov family — pairs expand FIRST
+    (array-side, carrying only the two key strings), then the narrow
+    rows join the (conv_id, turn_idx, ts) dim."""
     edges = links_from_entity_sets(
         turn_sets, top_level=top_level, carry=("conv_id", "turn_idx")
     )
@@ -428,8 +427,7 @@ def provenance_occurrences(
 def ddi_pair_observations(turn_sets: DataFrame, extracted: DataFrame) -> DataFrame:
     """Per-turn DDI observations: (d1, d2, effect, ref) with canonical
     d1 < d2 from the already-sorted per-turn drug set. The turn-granular
-    half of the quads stage — monotone under appends, so the streaming
-    incremental path can compute it batch-locally."""
+    half of the quads stage."""
     fx = extracted.where(F.col("ddi").isNotNull()).select(
         "conv_id", "turn_idx", F.explode("ddi.effects").alias("effect")
     )
@@ -466,9 +464,7 @@ def ddi_quads_from_observations(pairs: DataFrame) -> DataFrame:
     """Aggregate pair observations into DRUG_INTERACTION quads: salted
     refs-set merge per (pair, effect), then the direction-conflict
     exclusion — a (pair, side-effect) seen with both increase_ and
-    decrease_ is dropped (reference: build_benchmarks.py:101-105). NOT
-    monotone under appends (a new observation can retract a quad), which
-    is why the incremental path recomputes per affected pair."""
+    decrease_ is dropped (reference: build_benchmarks.py:101-105)."""
     refs = salted_collect_set(pairs, ["d1", "d2", "effect"], "ref", out_col="refs")
     base_se = F.regexp_replace("effect", "^(increase|decrease)_", "")
     per_se = refs.select(
@@ -1023,11 +1019,7 @@ class KGPipeline:
         two-phase set agg (hot pairs); the conflict rule — a (pair,
         side-effect) seen with both increase_ and decrease_ is dropped
         (reference: build_benchmarks.py:101-105) — is one aggregation over
-        the ≤2 direction rows per (pair, se), no extra join.
-
-        Split into two module-level steps (observations → aggregation) so
-        the streaming incremental path can recompute per affected drug
-        pair (streaming/ingest.py) with the SAME aggregation semantics."""
+        the ≤2 direction rows per (pair, se), no extra join."""
         return ddi_quads_from_observations(
             ddi_pair_observations(turn_sets, extracted)
         )

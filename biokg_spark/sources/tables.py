@@ -226,27 +226,3 @@ def write_family_table(
     w.parquet(target)
     return "path"
 
-
-def read_jsonl_table(
-    spark: SparkSession, path: str, schema: str | None = None
-) -> DataFrame:
-    """JSON-lines source with an EXPLICIT schema.
-
-    At 100 TB, schema inference is a full extra pass over the data and a
-    correctness hazard (type flapping between files), so callers pass a
-    DDL string; inference is allowed only when ``schema`` is None and is
-    intended for exploration, not pipelines. Corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job —
-    at web scale some malformed records are a certainty and one bad line
-    must not kill a 1000-executor stage. To monitor feed health,
-    ``cache()`` the DataFrame (or select other columns alongside) before
-    filtering/counting ``_corrupt_record`` — since Spark 2.3 a query
-    that references ONLY the internal corrupt-record column of an
-    uncached JSON read raises AnalysisException.
-    """
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema + ", _corrupt_record string")
-    return r.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    ).json(path)

@@ -44,15 +44,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench_extra import plan_string  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-
-
-def plan_string(df, mode: str = "formatted") -> str:
-    jdf = df._jdf
-    jvm = df.sparkSession._jvm
-    return jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    )
 
 
 # Queries where a normally-suspicious operator is the deliberate design.

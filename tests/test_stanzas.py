@@ -203,27 +203,6 @@ def test_write_family_table_partitioned(spark, tmp_path):
     assert "PPI" in plan
 
 
-def test_jsonl_source_explicit_schema_and_corrupt_records(spark, tmp_path):
-    """JSONL reads with a caller-supplied schema (no inference pass);
-    malformed lines are quarantined in _corrupt_record, not fatal."""
-    from biokg_spark.sources.tables import read_jsonl_table
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "alpha beta"}\n'
-        '{"doc_id": 2, "text": "gamma"}\n'
-        "this is not json at all\n"
-        '{"doc_id": "not_a_number", "text": "typed null"}\n'
-    )
-    df = read_jsonl_table(spark, str(p), "doc_id long, text string")
-    rows = df.collect()
-    assert len(rows) == 4
-    good = {r.doc_id: r.text for r in rows if r._corrupt_record is None}
-    assert good == {1: "alpha beta", 2: "gamma"}
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert len(bad) == 2  # the non-JSON line and the type-mismatched one
-
-
 def test_write_family_table_iceberg_runtime_smoke(tmp_path):
     """Real Iceberg catalog write IF the runtime jar is present, else a
     pinned skip (r3 verdict item 8).
