@@ -26,10 +26,12 @@ all removed so runs, partitionings, and ENGINES agree exactly:
 Scale shape: centroids are k x d doubles — the ONLY thing that ever
 reaches the driver (one k*d-row aggregate collect per iteration, the
 same bounded pattern as MLlib's KMeans). Assignment is a pure Column
-expression against centroid LITERALS (no join, no shuffle); the update
-is one posexplode + one map-side-partial HashAggregate on
-(cluster, dim) — k*d groups. Nothing is quadratic in points; iteration
-count bounds the job count.
+expression against ONE centroid-matrix literal under ONE lambda over
+its rows (no join, no shuffle), so the plan and the driver calls that
+build it stay the same size at any k and d; the update is one
+posexplode + one map-side-partial HashAggregate on (cluster, dim) —
+k*d groups. Nothing is quadratic in points; iteration count bounds the
+job count.
 
 Reference: n/a — training-data-pipeline mandate (embedding clustering);
 Lloyd's algorithm per MacQueen/Lloyd, quantized for engine parity.
@@ -37,41 +39,39 @@ Lloyd's algorithm per MacQueen/Lloyd, quantized for engine parity.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import json
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _QUANT = 1_000_000.0
+# argmin over (dist_u6, cluster) structs of the sequential double sum of
+# squared differences, floor(d * quant + 0.5) as BIGINT
+_ASSIGN_SQL = """array_min(transform(
+    from_json('{matrix}', 'array<array<double>>'),
+    (c, ci) -> struct(
+        floor(aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)),
+                        0D, (acc, x) -> acc + x) * {quant}D + 0.5D) AS dist_u6,
+        ci AS cluster)))"""
 # (cluster, bucket) join keys per pair-stage task in semantic_dedup, so
 # clusters of unequal size still hash out evenly over the tasks
 _KEYS_PER_TASK = 4
 
 
-def _sqdist(v: Column, cent: list[float]) -> Column:
-    lit = F.array(*[F.lit(float(x)) for x in cent])
-    return F.aggregate(
-        F.zip_with(v, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _assign(pts: DataFrame, cents: list[list[float]]) -> DataFrame:
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    F.floor(_sqdist(F.col("v"), c) * F.lit(_QUANT) + F.lit(0.5))
-                    .cast("long")
-                    .alias("dist_u6"),
-                    F.lit(ci).alias("cluster"),
-                )
-                for ci, c in enumerate(cents)
-            ]
-        )
-    )
-    return pts.withColumn("cluster", best["cluster"]).withColumn(
-        "dist_u6", best["dist_u6"]
-    )
+    """Add each point's nearest centroid (``cluster``) and its fixed-point
+    squared L2 distance (``dist_u6``); ties go to the lowest cluster id.
+
+    The k x d centroids enter as ONE JSON string, which the optimizer
+    folds into one ``array<array<double>>`` literal (JSON carries each
+    double's shortest round-trip repr, so the values arrive exact), and
+    one lambda runs over its rows, the row index being the cluster id:
+    the plan is the same size at every k and d. The expression is one
+    SQL string, so building it is one py4j call; ``F.lit`` of a list or
+    numpy array makes one per element, and the Column form of the same
+    lambdas about 250."""
+    best = F.expr(_ASSIGN_SQL.format(matrix=json.dumps(cents), quant=_QUANT))
+    return pts.withColumns({"cluster": best["cluster"], "dist_u6": best["dist_u6"]})
 
 
 def kmeans_assign(
@@ -87,6 +87,9 @@ def kmeans_assign(
     distance to the final centroid in fixed-point micro-units. A cluster emptied
     by an assignment round keeps its previous centroid (cannot happen
     with distinct init points and the id tie-break, but guarded).
+    Fewer than ``k`` points make as many clusters as there are points,
+    as the oracle does; an empty input gives an empty frame. Every
+    vector must have the init rows' dimension: ragged init rows raise.
     """
     pts, cents = _lloyd(emb, id_col, vec_col, k, iterations)
     out = _assign(pts, cents).select(id_col, "cluster", "dist_u6")
@@ -105,6 +108,13 @@ def _lloyd(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).cache()
     cents = [list(r.v) for r in pts.orderBy(id_col).limit(k).collect()]
+    dims = sorted({len(c) for c in cents})
+    if len(dims) > 1:
+        pts.unpersist()
+        raise ValueError(
+            f"k-means needs equal-dimension vectors in {vec_col!r}: the first"
+            f" {len(cents)} rows by {id_col} have lengths {dims}"
+        )
     for _ in range(iterations):
         assigned = _assign(pts, cents)
         upd = (
@@ -120,10 +130,8 @@ def _lloyd(
         for r in upd:
             by_cluster.setdefault(r.cluster, {})[r.dim] = float(r.s) / r.n / _QUANT
         cents = [
-            [by_cluster[ci][d] for d in range(len(cents[ci]))]
-            if ci in by_cluster
-            else cents[ci]
-            for ci in range(k)
+            [by_cluster[ci][d] for d in range(len(c))] if ci in by_cluster else c
+            for ci, c in enumerate(cents)
         ]
     return pts, cents
 

@@ -2343,10 +2343,10 @@ def embed_kmeans(spark, sf_dir):
     (micro-unit longs sum order-independently, unlike float sums), so
     every run, partitioning, and engine lands identical clusters — the
     oracle is the generated unrolled SQL twin. Shapes: assignment is a
-    pure Column expression against k x d centroid LITERALS (no join);
-    the update is one posexplode + one (cluster, dim) HashAggregate;
-    only k x d rows per iteration reach the driver (the MLlib KMeans
-    pattern)."""
+    pure Column expression against one k x d centroid-matrix literal
+    (no join); the update is one posexplode + one (cluster, dim)
+    HashAggregate; only k x d rows per iteration reach the driver (the
+    MLlib KMeans pattern)."""
     from biokg_spark.operators.clustering import kmeans_assign
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from biokg_spark.operators.clustering import kmeans_assign
 
 
@@ -147,3 +149,63 @@ def test_semantic_dedup_pair_stage_spreads_over_every_core(
     )
     assert tasks >= spark.sparkContext.defaultParallelism
     assert len(out) == 600
+
+
+def test_fewer_points_than_k_matches_oracle(spark):
+    """n < k: as many clusters as points, as the DuckDB twin makes (the
+    update used to index the k-th init row past the end)."""
+    import duckdb
+
+    from biokg_spark.operators.clustering import kmeans_oracle_sql, semantic_dedup
+
+    rows = [(5, [1.0, 2.0]), (1, [0.0, 0.5]), (9, [3.0, -1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(map(tuple, kmeans_assign(df, k=4).collect()))
+    values = ", ".join(f"({i}, {v}::FLOAT[])" for i, v in rows)
+    want = duckdb.connect().execute(
+        kmeans_oracle_sql(k=4, source_sql=f"(VALUES {values}) t(vec_id, embedding)")
+    ).fetchall()
+    assert got == sorted(want) == [(1, 0, 0), (5, 1, 0), (9, 2, 0)]
+    assert sorted(map(tuple, semantic_dedup(df, k=4).collect())) == [
+        (1, 0, True), (5, 1, True), (9, 2, True),
+    ]
+
+
+def test_empty_input_gives_empty_frame(spark):
+    from biokg_spark.operators.clustering import semantic_dedup
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = kmeans_assign(df, k=3)
+    assert out.schema.simpleString() == (
+        "struct<vec_id:bigint,cluster:int,dist_u6:bigint>"
+    )
+    assert out.collect() == []
+    dedup = semantic_dedup(df, k=3)
+    assert dedup.schema.simpleString() == (
+        "struct<vec_id:bigint,cluster:int,keep:boolean>"
+    )
+    assert dedup.collect() == []
+
+
+def test_ragged_init_rows_raise(spark):
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (2, [1.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="equal-dimension"):
+        kmeans_assign(df, k=2)
+
+
+def test_assign_plan_size_does_not_grow_with_k(spark):
+    """The centroids enter the plan as one matrix literal under one
+    lambda, so the analyzed plan holds as many lambda functions at k=32
+    as at k=2 (d=64 both)."""
+    rows = [
+        (i, [float((i * 7 + j * 13) % 29) / 4 for j in range(64)]) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def lambdas(k: int) -> int:
+        plan = kmeans_assign(df, k=k, iterations=1)._jdf.queryExecution().analyzed()
+        return plan.toString().count("lambdafunction")
+
+    assert lambdas(2) == lambdas(32)

@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis).
 
 The MentionScanner kernels are plain objects, so hypothesis hammers
-them cheaply without Spark. The dedup pair joins run on the test
-session with few examples.
+them cheaply without Spark. The dedup pair joins, k-means and the
+literal dims run on the test session with few examples.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import math
 import re
 from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import Phase, given, settings
+from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 
 from biokg_spark.operators.mentions import MentionScanner
@@ -110,6 +110,42 @@ def _partitionings(spark, rows):
     return df.coalesce(1), df.repartition(7)
 
 
+def _kmeans(rows, k: int, iterations: int = 2) -> dict:
+    """kmeans_assign in pure Python: the first k points by id as init,
+    the argmin of floor(d * 1e6 + 0.5) over sequential double sums with
+    the lowest cluster winning ties, and quantized-integer means (an
+    emptied cluster keeps its centroid). Returns {id: (cluster, dist_u6)}."""
+    pts = sorted(rows)
+    vec = dict(pts)
+    cents = [list(v) for _, v in pts[:k]]
+
+    def assign():
+        out = {}
+        for i, v in pts:
+            dists = []
+            for ci, c in enumerate(cents):
+                sq = 0.0
+                for a, b in zip(v, c):
+                    sq += (a - b) * (a - b)
+                dists.append((math.floor(sq * 1_000_000.0 + 0.5), ci))
+            dist, ci = min(dists)
+            out[i] = (ci, dist)
+        return out
+
+    for _ in range(iterations):
+        members: dict[int, list] = {}
+        for i, (ci, _dist) in assign().items():
+            members.setdefault(ci, []).append(vec[i])
+        for ci, vs in members.items():
+            cents[ci] = [
+                float(sum(math.floor(x * 1_000_000.0) for x in col))
+                / len(vs)
+                / 1_000_000.0
+                for col in zip(*vs)
+            ]
+    return assign()
+
+
 @SPARK_SETTINGS
 @given(embedding_sets())
 def test_embedding_near_dup_pairs_match_brute_force(spark, rows):
@@ -133,16 +169,13 @@ def test_embedding_near_dup_pairs_match_brute_force(spark, rows):
 @SPARK_SETTINGS
 @given(embedding_sets())
 def test_semantic_dedup_matches_brute_force(spark, rows):
-    from biokg_spark.operators.clustering import kmeans_assign, semantic_dedup
+    from biokg_spark.operators.clustering import semantic_dedup
 
     one, seven = (
         sorted(map(tuple, semantic_dedup(df, k=3, threshold=0.999).collect()))
         for df in _partitionings(spark, rows)
     )
-    assign = {
-        r.vec_id: (r.cluster, r.dist_u6)
-        for r in kmeans_assign(_partitionings(spark, rows)[0], k=3).collect()
-    }
+    assign = _kmeans(rows, 3)
     vec = dict(rows)
     losers = set()
     for a in vec:
@@ -152,3 +185,41 @@ def test_semantic_dedup_matches_brute_force(spark, rows):
                 losers.add(a if da < db else b if db < da else max(a, b))
     expect = sorted((i, assign[i][0], i not in losers) for i in vec)
     assert one == seven == expect
+
+
+@SPARK_SETTINGS
+@given(embedding_sets())
+def test_kmeans_assign_matches_brute_force(spark, rows):
+    from biokg_spark.operators.clustering import kmeans_assign
+
+    one, seven = (
+        sorted(map(tuple, kmeans_assign(df, k=3).collect()))
+        for df in _partitionings(spark, rows)
+    )
+    expect = sorted((i, ci, dist) for i, (ci, dist) in _kmeans(rows, 3).items())
+    assert one == seven == expect
+
+
+# -- literal dims --------------------------------------------------------
+
+
+@SPARK_SETTINGS
+@given(
+    st.lists(
+        st.tuples(st.text(), st.floats(allow_nan=True, allow_infinity=True)),
+        max_size=8,
+    )
+)
+@example([("\\", -0.0), ("it's\x00", float("nan")), ("\\u0041\\'", float("-inf"))])
+def test_local_df_round_trips_text_and_floats(spark, rows):
+    from biokg_spark.functions.dims import local_df
+
+    got = [tuple(r) for r in local_df(spark, rows, "s string, d double").collect()]
+    assert len(got) == len(rows)
+    for (s, d), (got_s, got_d) in zip(rows, got):
+        assert got_s == s
+        if math.isnan(d):
+            assert math.isnan(got_d)
+        else:
+            assert got_d == d
+            assert math.copysign(1.0, got_d) == math.copysign(1.0, d)
