@@ -48,29 +48,30 @@ _QUANT = 1_000_000.0
 # argmin over (dist_u6, cluster) structs of the sequential double sum of
 # squared differences, floor(d * quant + 0.5) as BIGINT
 _ASSIGN_SQL = """array_min(transform(
-    from_json('{matrix}', 'array<array<double>>'),
-    (c, ci) -> struct(
-        floor(aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)),
+    from_json('{matrix}', 'array<struct<cluster:int,v:array<double>>>'),
+    c -> struct(
+        floor(aggregate(zip_with(v, c.v, (a, b) -> (a - b) * (a - b)),
                         0D, (acc, x) -> acc + x) * {quant}D + 0.5D) AS dist_u6,
-        ci AS cluster)))"""
+        c.cluster AS cluster)))"""
 # (cluster, bucket) join keys per pair-stage task in semantic_dedup, so
 # clusters of unequal size still hash out evenly over the tasks
 _KEYS_PER_TASK = 4
 
 
-def _assign(pts: DataFrame, cents: list[list[float]]) -> DataFrame:
+def _assign(pts: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     """Add each point's nearest centroid (``cluster``) and its fixed-point
     squared L2 distance (``dist_u6``); ties go to the lowest cluster id.
 
-    The k x d centroids enter as ONE JSON string, which the optimizer
-    folds into one ``array<array<double>>`` literal (JSON carries each
-    double's shortest round-trip repr, so the values arrive exact), and
-    one lambda runs over its rows, the row index being the cluster id:
-    the plan is the same size at every k and d. The expression is one
-    SQL string, so building it is one py4j call; ``F.lit`` of a list or
-    numpy array makes one per element, and the Column form of the same
-    lambdas about 250."""
-    best = F.expr(_ASSIGN_SQL.format(matrix=json.dumps(cents), quant=_QUANT))
+    The k x d centroids (cluster id -> vector) enter as ONE JSON string,
+    which the optimizer folds into one ``array<struct<cluster, v>>``
+    literal (JSON carries each double's shortest round-trip repr, so the
+    values arrive exact), and one lambda runs over its rows: the plan is
+    the same size at every k and d. The expression is one SQL string, so
+    building it is one py4j call; ``F.lit`` of a list or numpy array
+    makes one per element, and the Column form of the same lambdas about
+    250."""
+    matrix = json.dumps([{"cluster": ci, "v": c} for ci, c in cents.items()])
+    best = F.expr(_ASSIGN_SQL.format(matrix=matrix, quant=_QUANT))
     return pts.withColumns({"cluster": best["cluster"], "dist_u6": best["dist_u6"]})
 
 
@@ -84,9 +85,10 @@ def kmeans_assign(
     """Run ``iterations`` Lloyd's rounds; return the final assignment.
 
     Output: (id_col, cluster int, dist_u6 long) — the squared L2
-    distance to the final centroid in fixed-point micro-units. A cluster emptied
-    by an assignment round keeps its previous centroid (cannot happen
-    with distinct init points and the id tie-break, but guarded).
+    distance to the final centroid in fixed-point micro-units. A cluster
+    emptied by an assignment round drops out of later rounds, and every
+    surviving cluster keeps its id, as the oracle does; duplicate points
+    among the first ``k`` ids empty one (both copies join the lowest id).
     Fewer than ``k`` points make as many clusters as there are points,
     as the oracle does; an empty input gives an empty frame. Every
     vector must have the init rows' dimension: ragged init rows raise.
@@ -99,16 +101,17 @@ def kmeans_assign(
 
 def _lloyd(
     emb: DataFrame, id_col: str, vec_col: str, k: int, iterations: int
-) -> tuple[DataFrame, list[list[float]]]:
+) -> tuple[DataFrame, dict[int, list[float]]]:
     """Lloyd's rounds of :func:`kmeans_assign`: the cached ``(id_col, v)``
-    points (``v`` the double-cast vector) and the final centroids. The
-    caller unpersists the points."""
+    points (``v`` the double-cast vector) and the final centroids by
+    cluster id, emptied clusters dropped. The caller unpersists the
+    points."""
     pts = emb.select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).cache()
-    cents = [list(r.v) for r in pts.orderBy(id_col).limit(k).collect()]
-    dims = sorted({len(c) for c in cents})
+    cents = dict(enumerate(list(r.v) for r in pts.orderBy(id_col).limit(k).collect()))
+    dims = sorted({len(c) for c in cents.values()})
     if len(dims) > 1:
         pts.unpersist()
         raise ValueError(
@@ -129,10 +132,10 @@ def _lloyd(
         by_cluster: dict[int, dict[int, float]] = {}
         for r in upd:
             by_cluster.setdefault(r.cluster, {})[r.dim] = float(r.s) / r.n / _QUANT
-        cents = [
-            [by_cluster[ci][d] for d in range(len(c))] if ci in by_cluster else c
-            for ci, c in enumerate(cents)
-        ]
+        cents = {
+            ci: [by_dim[d] for d in range(len(by_dim))]
+            for ci, by_dim in by_cluster.items()
+        }
     return pts, cents
 
 

@@ -6,49 +6,63 @@ compile_biokg.py:1175) → ``build_benchmarks`` (derive,
 build_benchmarks.py:23) — re-architected as checkpointed DataFrame stages
 over a transcript table instead of a single-threaded file walk.
 
-Stages (each a checkpointed parquet table, resumable):
+The stage graph is declared once, as the ordered table of
+``KGPipeline._stages``: ``name -> (inputs, build, partition_by,
+background, own fingerprint parts)``. ``KGPipeline.run`` runs that table
+on one thread pool, each stage starting as soon as its declared inputs
+are done, and keys each checkpoint on a fingerprint chained from the
+stage's declared inputs, so a resumed run rebuilds exactly the stages
+below whatever changed. Every stage except the two views is a
+checkpointed parquet table (plans/checkpoint.py), resumable:
 
-1. **ingest** — order/validate transcripts: duplicate (conv_id, turn_idx)
-   keys are a hard error; per-turn text equality is checked by key-join
-   (never positional zip). Repartitioned on hash(conv_id) so every
-   downstream per-conversation op is co-located.
-2. **mentions** — Arrow-batched dictionary scan (operators/mentions.py)
-   against the broadcast lexicon → (conv_id, turn_idx, entity, type).
-3. **linked** — canonicalization: broadcast join against id_mapping maps
-   raw ``ALT:`` ids to canonical ids (1:N fan-out preserved, reference:
-   parsers.py:1970-1988); unmapped ids pass through (already canonical).
-4. **triples** — emit the graph:
-   - MENTIONS (turn → entity) with provenance refs;
-   - typed co-occurrence links per entity-type pair (PPI, DPI, DDI, …)
-     with the reference's undirected canonical form (least, greatest)
-     for symmetric predicates (compile_biokg.py:192-195);
-   - DDI side-effect quads via the FULL 15-pattern ordered regex cascade
-     (first-match-wins, reference: parsers.py:24-45 + :927-977) with
-     conflict exclusion: a (drug, drug, side-effect) seen with both
-     increase_ and decrease_ directions is dropped (reference:
-     build_benchmarks.py:101-105);
-   - extended action quads (drug, DRUG_TARGET/ENZYME/CARRIER/TRANSPORTER/
-     DPI, protein, action, pubmed-refs — reference: parsers.py:904-925);
-   - protein-expression quads with LOW/MEDIUM/HIGH enums (reference:
-     compile_biokg.py:855-888);
-   - organism-qualified 6-column phosphorylation quads (reference:
-     parsers.py:2703-2744);
-   - the FULL published properties/metadata taxonomy routed off the
-     ontology dim (GO/InterPro/SIDER/ATC/TREE/pathway hierarchy +
-     per-type metadata — pipeline/taxonomy.py; reference contract:
-     properties_description.txt:7-306, meta_description.txt:8-346).
-   Closed predicate vocabulary enforced exactly like the reference's
-   fan-out writers raise on unknown predicates (compile_biokg.py:969).
-5. **emit** — partitioned-by-predicate parquet table families
-   (links / properties / metadata), the Spark analog of the reference's
-   per-predicate file tree (compile_biokg.py:292-305); plus the
-   per-species PPI fan-out export (compile_biokg.py:215-272).
+- **ingest** — order/validate transcripts: duplicate (conv_id, turn_idx)
+  keys are a hard error; per-turn text equality is checked by key-join
+  (never positional zip). Repartitioned on hash(conv_id) so every
+  downstream per-conversation op is co-located.
+- **extracted** — ONE Arrow-batched pass over the wide text column runs
+  every fact extractor the quad families read (``_extract_facts``).
+- **mentions** — Arrow-batched dictionary scan (operators/mentions.py)
+  against the broadcast lexicon → (conv_id, turn_idx, entity, type).
+- **linked** (view) — canonicalization: broadcast join against
+  id_mapping maps raw ``ALT:`` ids to canonical ids (1:N fan-out
+  preserved, reference: parsers.py:1970-1988); unmapped ids pass through
+  (already canonical).
+- **ontology** (view, only with an ontology dim) — the routed
+  properties/metadata taxonomy and the top-level pathway set.
+- **turn_sets** — the per-turn entity sets that links and quads share.
+- the emitted families (links, links_prov, metadata, properties, quads,
+  action_quads, expr_quads, phos_quads):
+  - MENTIONS (turn → entity) with provenance refs;
+  - typed co-occurrence links per entity-type pair (PPI, DPI, DDI, …)
+    with the reference's undirected canonical form (least, greatest)
+    for symmetric predicates (compile_biokg.py:192-195);
+  - DDI side-effect quads via the FULL 15-pattern ordered regex cascade
+    (first-match-wins, reference: parsers.py:24-45 + :927-977) with
+    conflict exclusion: a (drug, drug, side-effect) seen with both
+    increase_ and decrease_ directions is dropped (reference:
+    build_benchmarks.py:101-105);
+  - extended action quads (drug, DRUG_TARGET/ENZYME/CARRIER/TRANSPORTER/
+    DPI, protein, action, pubmed-refs — reference: parsers.py:904-925);
+  - protein-expression quads with LOW/MEDIUM/HIGH enums (reference:
+    compile_biokg.py:855-888);
+  - organism-qualified 6-column phosphorylation quads (reference:
+    parsers.py:2703-2744);
+  - the FULL published properties/metadata taxonomy routed off the
+    ontology dim (GO/InterPro/SIDER/ATC/TREE/pathway hierarchy +
+    per-type metadata — pipeline/taxonomy.py; reference contract:
+    properties_description.txt:7-306, meta_description.txt:8-346).
+  Closed predicate vocabulary enforced exactly like the reference's
+  fan-out writers raise on unknown predicates (compile_biokg.py:969).
+  links / properties / metadata are partitioned by predicate, the Spark
+  analog of the reference's per-predicate file tree
+  (compile_biokg.py:292-305); ``export_core`` adds the per-species PPI
+  fan-out export (compile_biokg.py:215-272).
 """
 
 from __future__ import annotations
 
 import os
-import sys
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -484,6 +498,10 @@ def ddi_quads_from_observations(pairs: DataFrame) -> DataFrame:
     )
 
 
+# stages of KGPipeline._stages that are built in place, never checkpointed
+VIEWS = ("linked", "ontology")
+
+
 class KGPipeline:
     def __init__(
         self,
@@ -559,8 +577,8 @@ class KGPipeline:
         checked against the published per-type vocabularies up front — the
         Spark analog of the reference's per-file fan-out writers raising
         on unknown predicates (compile_biokg.py:969). assert_routed is a
-        limit-1 job on a dim table, not a hot-path collect. Runs on the
-        background pool, concurrent with the mention chain."""
+        limit-1 job on a dim table, not a hot-path collect. Built as the
+        ``ontology`` view, concurrent with the transcript stages."""
         onto = self._onto()
         routed = route_ontology(onto)
         assert_routed(routed)
@@ -592,202 +610,102 @@ class KGPipeline:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
     # ------------------------------------------------------------------
-    def run(self, transcripts: DataFrame, run_key: str = "default") -> dict[str, DataFrame]:
-        fp0 = fingerprint("ingest", run_key, str(self.buckets))
-        ingested = self.ckpt.run("ingest", fp0, lambda: self._ingest(transcripts))
+    def _stages(self, transcripts: DataFrame, run_key: str) -> dict[str, tuple]:
+        """The pipeline's stage graph, in declaration order (every input is
+        declared before its reader): ``name -> (inputs, build,
+        partition_by, background, *own fingerprint parts)``, where
+        ``build`` takes ``{input name: its value}``.
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        # The fact-extraction pass depends ONLY on ingest — run it
-        # concurrently with the mentions→linked→turn_sets chain (similar
-        # wall: the two scans of the same bucketed input overlap instead
-        # of serializing; measured ~15 s hidden at local[8]/3M turns).
-        fp1b = fingerprint("extracted", fp0)
-        extract_pool = ThreadPoolExecutor(max_workers=2)
-        extracted_fut = extract_pool.submit(
-            self.ckpt.run, "extracted", fp1b, lambda: self._extract_facts(ingested)
-        )
-        # ontology prep (localCheckpoint + routing assert + top-level set)
-        # depends on NOTHING from the transcript chain — overlap it with
-        # the mentions scan instead of serializing ~5 s of dim evaluation
-        # between turn_sets and the family fan-out
-        onto_fut = (
-            extract_pool.submit(self._prepare_ontology)
-            if self.ontology is not None
-            else None
-        )
-
-        early_pool = None
-        early_futs: dict = {}
-        try:
-            fp1 = fingerprint("mentions", fp0, self.disambiguation)
-            mentions = self.ckpt.run("mentions", fp1, lambda: self._mentions(ingested))
-
-            # linked is a broadcast-join VIEW over the mentions checkpoint
-            # — not checkpointed: its build is ~0 (narrow dim join) while a
-            # checkpoint cycle costs a full write+commit+read-back (~2.5 s
-            # at 3M turns), pure serial floor. Downstream consumers
-            # (turn_sets, metadata) recompute the cheap join from the
-            # mentions parquet; lineage stays truncated at the mentions
-            # checkpoint. fp2 still keys every downstream fingerprint on
-            # the canonicalizer choice.
-            fp2 = fingerprint("linked", fp1, self.canonicalizer)
-            linked = self._link(mentions)
-
-            # ONE extraction pass over the (wide) text column feeds all
-            # four quad families (submitted above, concurrent with mention
-            # scanning). Before this stage existed, each family rescanned
-            # the full transcript text and re-ran its regexes: at 3M turns
-            # / local[8] the concurrent-family phase measured 34 s vs 17 s
-            # in the four-family engine — the text column is the bulk of
-            # the table and scanning it four times was the regression. The
-            # extracted table is narrow (a struct + a few short strings)
-            # and keeps only turns where at least one extractor hit.
-            # (Awaited here, before turn_sets: extracted consistently
-            # finishes under the mentions pole — 42 s vs 63 s at local[8],
-            # 197 s vs 234 s at local[2], 9M turns — so this wait is free
-            # and unblocks the early-family launch below.)
-            extracted = extracted_fut.result()
-            routed, top_level = (
-                onto_fut.result() if onto_fut is not None else (None, None)
-            )
-
-            # EARLY families — everything whose inputs are already on
-            # disk: metadata (linked + routed; the largest output table),
-            # properties (routed only) and phos_quads (extracted only)
-            # do NOT depend on turn_sets, so they run CONCURRENT with the
-            # turn_sets aggregation instead of queueing behind it. At
-            # local[8]/9M turns this hides most of the 29 s metadata wall
-            # under the 19 s turn_sets shuffle + the remaining family
-            # phase; at local[2] the cores are saturated either way, so
-            # the overlap is a pure scaling-efficiency win (the idle-slot
-            # fill a real cluster gets from independent-job submission).
-            early_tasks: dict[str, tuple] = {
-                "phos_quads": (
-                    fingerprint("phos_quads", fp1b),
-                    lambda: self._phos_quads(extracted),
-                    None,
-                ),
-                "metadata": (
-                    fingerprint("metadata", fp2, "v3"),
-                    lambda: self._metadata(linked, routed),
-                    ["pred"],
-                ),
-            }
-            if routed is not None:
-                early_tasks["properties"] = (
-                    fingerprint("properties", run_key, "v3"),
-                    lambda: self._properties(routed),
-                    ["pred"],
-                )
-            early_pool = ThreadPoolExecutor(max_workers=len(early_tasks))
-            early_futs = {
-                name: early_pool.submit(
-                    self._run_in_background_pool, name, fp, build, pb
-                )
-                for name, (fp, build, pb) in early_tasks.items()
-            }
-
-            # shared per-turn entity sets: the single aggregation both the
-            # links and quads stages consume (one shuffle instead of two)
-            fp2b = fingerprint("turn_sets", fp2)
-            turn_sets = self.ckpt.run(
-                "turn_sets", fp2b, lambda: self._turn_sets(linked)
-            )
-        except BaseException:
-            # on any failure in the mentions→turn_sets chain, don't leak
-            # the background futures/pools: cancel if still queued, await
-            # if running (so their Spark jobs aren't orphaned) — including
-            # the early families if they were already launched
-            for fut in early_futs.values():
-                fut.cancel()
-            if early_pool is not None:
-                early_pool.shutdown(wait=True)
-            raise
-        finally:
-            extracted_fut.cancel()
-            if onto_fut is not None:
-                onto_fut.cancel()
-            extract_pool.shutdown(wait=True)
-
-        # The output families are independent given (turn_sets, extracted)
-        # — submit them as CONCURRENT Spark jobs (SparkSession is
-        # thread-safe for job submission). Sequential execution would
-        # serialize per-family driver-side latency floors and leave
-        # executor slots idle between stages; on a real cluster these are
-        # exactly the jobs you overlap.
-        tasks: dict[str, tuple] = {
+        - ``extracted`` is the ONE pass over the wide text column that all
+          four quad families read; it overlaps the mentions scan.
+        - ``linked`` and ``ontology`` are views (``VIEWS``): ``linked`` is
+          a broadcast dim join over the mentions checkpoint, whose build
+          is ~0 against a checkpoint cycle's write+commit+read-back;
+          ``ontology`` is the routed, lineage-truncated dim and the
+          top-level pathway set.
+        - ``background`` stages read nothing from ``turn_sets`` and run in
+          the weight-1 FAIR pool (``_run_in_background_pool``), so they
+          only backfill slots the critical chain leaves idle.
+        - ``links`` is a projection of the ``links_prov`` checkpoint: the
+          provenance aggregate's key set IS the distinct links table, and
+          a second pair expansion doubled the late-phase CPU (e2e 10.6 s →
+          22.7 s at 299k turns)."""
+        no_onto = (None, None)
+        onto = ("ontology",) if self.ontology is not None else ()
+        stages = {
+            "ingest": ((), lambda d: self._ingest(transcripts), None, False,
+                       run_key, str(self.buckets)),
+            "extracted": (("ingest",), lambda d: self._extract_facts(d["ingest"]),
+                          None, False),
+            "mentions": (("ingest",), lambda d: self._mentions(d["ingest"]),
+                         None, False, self.disambiguation),
+            "linked": (("mentions",), lambda d: self._link(d["mentions"]),
+                       None, False, self.canonicalizer),
+            "ontology": ((), lambda d: self._prepare_ontology(), None, False, run_key),
+            "turn_sets": (("linked",), lambda d: self._turn_sets(d["linked"]),
+                          None, False),
+            "phos_quads": (("extracted",), lambda d: self._phos_quads(d["extracted"]),
+                           None, True),
+            "metadata": (
+                ("linked", *onto),
+                lambda d: self._metadata(d["linked"], d.get("ontology", no_onto)[0]),
+                ["pred"], True,
+            ),
+            "properties": (onto, lambda d: self._properties(d["ontology"][0]),
+                           ["pred"], True),
             "links_prov": (
-                fingerprint("links_prov", fp2b, fp0, "v1"),
-                lambda: self._links_provenance(ingested, turn_sets, top_level),
-                ["pred"],
+                ("turn_sets", "ingest", *onto),
+                lambda d: self._links_provenance(
+                    d["ingest"], d["turn_sets"], d.get("ontology", no_onto)[1]
+                ),
+                ["pred"], False,
             ),
-            "quads": (
-                fingerprint("quads", fp2b, fp1b),
-                lambda: self._effect_quads(turn_sets, extracted),
-                None,
-            ),
-            "action_quads": (
-                fingerprint("action_quads", fp2b, fp1b),
-                lambda: self._action_quads(turn_sets, extracted),
-                ["pred"],
-            ),
-            "expr_quads": (
-                fingerprint("expr_quads", fp2b, fp1b),
-                lambda: self._expression_quads(turn_sets, extracted),
-                None,
-            ),
+            "links": (("links_prov",),
+                      lambda d: d["links_prov"].select("subj", "pred", "obj"),
+                      ["pred"], False),
+            "quads": (("turn_sets", "extracted"),
+                      lambda d: self._effect_quads(d["turn_sets"], d["extracted"]),
+                      None, False),
+            "action_quads": (("turn_sets", "extracted"),
+                             lambda d: self._action_quads(d["turn_sets"], d["extracted"]),
+                             ["pred"], False),
+            "expr_quads": (("turn_sets", "extracted"),
+                           lambda d: self._expression_quads(d["turn_sets"], d["extracted"]),
+                           None, False),
         }
-        out = {
-            "ingest": ingested,
-            "mentions": mentions,
-            "linked": linked,
-            "turn_sets": turn_sets,
-            "extracted": extracted,
-        }
-        try:
-            with ThreadPoolExecutor(max_workers=len(tasks) + 1) as pool:
-                futures = {
-                    name: pool.submit(
-                        self.ckpt.run, name, fp, build, partition_by=pb
-                    )
-                    for name, (fp, build, pb) in tasks.items()
-                }
-                # links is a PROJECTION of the links_prov checkpoint —
-                # the provenance aggregate's (subj, pred, obj) key set IS
-                # the distinct links table, so running the pair expansion
-                # twice (as separate links and links_prov builds) doubles
-                # the late-phase CPU for nothing: measured e2e 10.6 s →
-                # 22.7 s at 299k turns when both expansions ran. The
-                # builder blocks on the links_prov future (the pool has a
-                # spare worker for it), then writes a column-pruned read
-                # of that parquet.
-                futures["links"] = pool.submit(
-                    self.ckpt.run,
-                    "links",
-                    fingerprint("links", fp2b, "v4-from-prov"),
-                    lambda: futures["links_prov"]
-                    .result()
-                    .select("subj", "pred", "obj"),
-                    partition_by=["pred"],
-                )
-                for name, fut in futures.items():
-                    out[name] = fut.result()
-        finally:
-            # the early families (launched before turn_sets) are reaped
-            # even if a late family failed, so their Spark jobs are never
-            # orphaned; every fut is awaited even if one raised (the first
-            # early-family error propagates only when the late phase
-            # succeeded, so it never masks the primary failure)
-            early_err = None
-            for name, fut in early_futs.items():
-                try:
-                    out[name] = fut.result()
-                except BaseException as e:  # noqa: BLE001 — reap them all
-                    early_err = early_err or e
-            early_pool.shutdown(wait=True)
-            if early_err is not None and sys.exc_info()[0] is None:
-                raise early_err
+        if not onto:
+            del stages["ontology"], stages["properties"]
+        return stages
+
+    def run(self, transcripts: DataFrame, run_key: str = "default") -> dict[str, DataFrame]:
+        """Run ``_stages`` on one thread pool: each stage starts as soon as
+        its inputs are done, as its own concurrent Spark jobs. A stage's
+        checkpoint is keyed on ``fingerprint(name, *own parts, *input
+        fingerprints)``, so changing anything upstream (an ontology added
+        on resume included) rebuilds everything below it. Every stage is
+        awaited; the first failure in declaration order is raised."""
+        stages = self._stages(transcripts, run_key)
+        fps: dict[str, str] = {}
+        for name, (inputs, _build, _pb, _bg, *own) in stages.items():
+            fps[name] = fingerprint(name, *own, *(fps[i] for i in inputs))
+        futs: dict[str, Future] = {}
+
+        def stage(name: str):
+            inputs, build, partition_by, background, *_own = stages[name]
+            d = {i: futs[i].result() for i in inputs}
+            if name in VIEWS:
+                return build(d)
+            # looked up per call, so a wrapper set on the instance sees every stage
+            ckpt_run = self._run_in_background_pool if background else self.ckpt.run
+            return ckpt_run(name, fps[name], lambda: build(d), partition_by=partition_by)
+
+        with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+            for name in stages:
+                futs[name] = pool.submit(stage, name)
+        failed = [e for f in futs.values() if (e := f.exception()) is not None]
+        if failed:
+            raise failed[0]
+        out = {name: f.result() for name, f in futs.items() if name != "ontology"}
         self._assert_vocabulary(out)
         return out
 
@@ -860,10 +778,6 @@ class KGPipeline:
             ),
             keys=["conv_id", "turn_idx"],
         )
-
-    # -- stage 4a: typed co-occurrence links ------------------------------
-    def _links(self, turn_sets: DataFrame, top_level: DataFrame | None = None) -> DataFrame:
-        return links_from_entity_sets(turn_sets, top_level=top_level)
 
     # -- stage 4b': provenance-annotated links ---------------------------
     def _links_provenance(

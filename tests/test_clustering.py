@@ -171,6 +171,27 @@ def test_fewer_points_than_k_matches_oracle(spark):
     ]
 
 
+def test_emptied_cluster_drops_out_as_in_oracle(spark):
+    """Ids 0 and 1 share a point, so the first round's assignment sends
+    both to cluster 0 and empties cluster 1. The DuckDB twin drops an
+    emptied cluster from later rounds while the survivors keep their ids;
+    the operator must too (it used to keep cluster 1's stale centroid)."""
+    import duckdb
+
+    from biokg_spark.operators.clustering import kmeans_oracle_sql
+
+    rows = [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [10.0, 10.0]), (3, [3.0, 3.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(map(tuple, kmeans_assign(df, k=3).collect()))
+    values = ", ".join(f"({i}, {v}::FLOAT[])" for i, v in rows)
+    want = duckdb.connect().execute(
+        kmeans_oracle_sql(k=3, source_sql=f"(VALUES {values}) t(vec_id, embedding)")
+    ).fetchall()
+    assert got == sorted(want) == [
+        (0, 0, 888889), (1, 0, 888889), (2, 2, 0), (3, 0, 3555556),
+    ]
+
+
 def test_empty_input_gives_empty_frame(spark):
     from biokg_spark.operators.clustering import semantic_dedup
 

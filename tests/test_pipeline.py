@@ -1,10 +1,17 @@
 from __future__ import annotations
 
+import ast
+import os
+from collections import Counter
+
 import pytest
 
 from biokg_spark.datagen import entity_lexicon, id_mapping, ontology, transcripts
 from biokg_spark.pipeline import PREDICATE_VOCABULARY, KGPipeline
+from biokg_spark.pipeline.kg import VIEWS
 from tests.oracle_kg import expected_outputs, precision_recall
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -141,6 +148,95 @@ def test_changed_key_invalidates(spark, fixture_inputs, outputs):
     pipe3 = KGPipeline(spark, wd, lex, mp, onto, buckets=4)
     pipe3.run(tx, run_key="other-key")
     assert not pipe3.metrics()["ingest"]["skipped"]
+
+
+def test_resume_after_adding_ontology_matches_fresh_run(spark, fixture_inputs, tmp_path):
+    """A run without an ontology, then one with it, in the same workdir
+    under the same run_key: every stage that reads the ontology rebuilds
+    (its fingerprint chains the ontology view's), the rest are served,
+    and the emitted tables equal a fresh run's."""
+    _tx, lex, mp, onto = fixture_inputs
+    tx = transcripts(spark, n_conversations=20)
+    wd = str(tmp_path / "resumed")
+    KGPipeline(spark, wd, lex, mp, buckets=2).run(tx, run_key="onto")
+    resumed = KGPipeline(spark, wd, lex, mp, onto, buckets=2)
+    got = resumed.run(tx, run_key="onto")
+    fresh = KGPipeline(spark, str(tmp_path / "fresh"), lex, mp, onto, buckets=2)
+    want = fresh.run(tx, run_key="onto")
+    for family in ("metadata", "links", "links_prov", "properties"):
+        assert Counter(map(tuple, got[family].collect())) == Counter(
+            map(tuple, want[family].collect())
+        ), family
+    served = {name for name, m in resumed.metrics().items() if m["skipped"]}
+    assert served == {
+        "ingest", "extracted", "mentions", "turn_sets",
+        "phos_quads", "quads", "action_quads", "expr_quads",
+    }
+
+
+@pytest.mark.parametrize("stage_fn", ["_phos_quads", "_turn_sets"])
+def test_stage_failure_raises_after_every_stage_settles(
+    spark, fixture_inputs, tmp_path, monkeypatch, stage_fn
+):
+    """A failing background stage and a failing critical-chain stage both
+    surface as that exact error, only after every other stage has settled:
+    no Spark job is left running, and an independent stage completed."""
+    _tx, lex, mp, onto = fixture_inputs
+    err = RuntimeError(f"{stage_fn} failed")
+
+    def fail(self, *args):
+        raise err
+
+    monkeypatch.setattr(KGPipeline, stage_fn, fail)
+    pipe = KGPipeline(spark, str(tmp_path), lex, mp, onto, buckets=2)
+    with pytest.raises(RuntimeError) as info:
+        pipe.run(transcripts(spark, n_conversations=2), run_key="fail")
+    assert info.value is err
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ends reach the status store
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert os.path.exists(os.path.join(str(tmp_path), "extracted", "_MANIFEST.json"))
+
+
+def _perfbench_stage_names() -> dict:
+    """STAGES, QUAD_FAMILIES, EMIT_STAGES, SCAN_STAGES and STAGE_DEPS as
+    perfbench/run.py declares them, read from its source (not imported)."""
+    names = {"STAGES", "QUAD_FAMILIES", "EMIT_STAGES", "SCAN_STAGES", "STAGE_DEPS"}
+    with open(os.path.join(REPO, "perfbench", "run.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return {
+        node.targets[0].id: ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and isinstance(node.targets[0], ast.Name)
+        and node.targets[0].id in names
+    }
+
+
+def test_benchmark_stage_graph_matches_engine():
+    """perfbench keeps its own copy of the stage graph for the critical
+    path. With each view replaced by the checkpoints it reads (linked ->
+    mentions; the ontology view reads none), the engine's declared inputs
+    must equal it, and every stage the benchmark names must exist."""
+    pipe = KGPipeline.__new__(KGPipeline)  # the table needs no Spark
+    pipe.ontology, pipe.buckets = object(), 2
+    pipe.disambiguation, pipe.canonicalizer = "priority", "mapping"
+    stages = pipe._stages(None, "k")
+
+    def reads(inputs) -> set[str]:
+        return {
+            c for i in inputs for c in (reads(stages[i][0]) if i in VIEWS else {i})
+        }
+
+    engine = {
+        name: reads(row[0]) for name, row in stages.items() if name not in VIEWS
+    }
+    bench = _perfbench_stage_names()
+    assert {n: d for n, d in engine.items() if d} == {
+        n: set(d) for n, d in bench["STAGE_DEPS"].items()
+    }
+    for key in ("STAGES", "QUAD_FAMILIES", "EMIT_STAGES", "SCAN_STAGES"):
+        assert set(bench[key]) - {"quad_families"} <= set(engine), key
 
 
 def test_duplicate_turn_key_raises(spark, fixture_inputs, tmp_path):
