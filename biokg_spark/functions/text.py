@@ -143,40 +143,6 @@ def split_assign(col: Column | str, fractions: dict[str, float]) -> Column:
     return expr
 
 
-def stratified_keep(
-    stratum_col: Column | str,
-    key_col: Column | str,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-) -> Column:
-    """Boolean keep-mask for per-stratum downsampling (corpus
-    rebalancing: cap the dominant language/source, keep the tail).
-
-    Deterministic and engine-portable like :func:`split_assign`: a row
-    survives iff the first 4 hex chars of ``md5(key)`` compare below the
-    stratum's hex threshold (granularity 1/65536; a rate ≥ 1 keeps all
-    rows including the single 'ffff' hash value). No RNG — the decision
-    depends only on the key, so it is stable across runs, partitions,
-    engines, and dataset growth, and the SAME rows survive when the
-    pipeline re-runs incrementally (``sampleBy`` re-rolls per run).
-
-    Scale: pure Column expression over a handful of strata — stays in
-    whole-stage codegen, no shuffle, pushes down past column pruning.
-    """
-    h = F.substring(F.md5(_c(key_col).cast("string")), 1, 4)
-    s = _c(stratum_col)
-
-    def mask(rate: float) -> Column:
-        if rate >= 1.0:
-            return F.lit(True)
-        return h < format(min(int(rate * 65536), 65535), "04x")
-
-    expr = mask(default_rate)
-    for stratum, rate in rates.items():
-        expr = F.when(s == stratum, mask(rate)).otherwise(expr)
-    return expr
-
-
 def doc_fingerprint(col: Column | str) -> Column:
     """Content fingerprint: md5 of the normalized text (lowercased,
     whitespace collapsed) — the exact-dedup key. md5 is bit-identical in

@@ -46,44 +46,22 @@ def char_shingles(col: Column | str, width: int = 3) -> Column:
 
 
 def _signatures(
-    df: DataFrame, surface_col: str, num_hashes: int, width: int
+    df: DataFrame, surface_col: str, num_hashes: int, width: int, bands: int
 ) -> DataFrame:
-    """(surface, shingles, sig): one row per distinct surface."""
-    from biokg_spark.operators.dedup import _seed_hash
+    """(surface, shingles, band_idx, band_key): the LSH bands of each
+    distinct surface (the MinHash kernel and banding of operators/dedup.py,
+    grouped by (surface, shingles) so the exact Jaccard can reuse the
+    shingle array)."""
+    from biokg_spark.operators.dedup import _lsh_bands, _min_hashes
 
+    keys = ["surface", "shingles"]
     base = df.select(F.col(surface_col).alias("surface")).dropDuplicates()
     with_sh = base.withColumn("shingles", char_shingles("surface", width))
-    sh = with_sh.select("surface", "shingles", F.explode("shingles").alias("sh"))
-    # long-valued hash family (dedup._seed_hash): min over LONG buffers
-    # plans as HashAggregate; the old hex-string min was a SortAggregate
-    aggs = [
-        F.min(_seed_hash(s, F.col("sh"))).alias(f"_h{s}")
-        for s in range(num_hashes)
-    ]
-    sigs = sh.groupBy("surface", "shingles").agg(*aggs)
-    return sigs.select(
-        "surface",
-        "shingles",
-        F.array(*[F.col(f"_h{s}") for s in range(num_hashes)]).alias("sig"),
+    sh = with_sh.select(*keys, F.explode("shingles").alias("sh"))
+    sigs = _min_hashes(sh, keys, num_hashes, None).select(
+        *keys, F.array(*[F.col(f"_h{s}") for s in range(num_hashes)]).alias("sig")
     )
-
-
-def _bands(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    rows = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
-                )
-            ).alias("band_key"),
-        )
-        for b in range(bands)
-    ]
-    return sigs.select(
-        "surface", "shingles", F.explode(F.array(*band_cols)).alias("band")
-    ).select("surface", "shingles", "band.band_idx", "band.band_key")
+    return _lsh_bands(sigs, keys, num_hashes, bands)
 
 
 def fuzzy_canonicalize(
@@ -103,13 +81,12 @@ def fuzzy_canonicalize(
     that cleared ``threshold`` — (alt_surface, entity_id, entity_type,
     jaccard). Ties break on (higher jaccard, entity_id) deterministically.
     """
-    assert num_hashes % bands == 0
-    a_sig = _bands(_signatures(alt, alt_surface, num_hashes, width), num_hashes, bands)
+    a_sig = _signatures(alt, alt_surface, num_hashes, width, bands)
     c_base = canonical.select(
         F.col(canon_surface).alias("surface"), "entity_id", "entity_type"
     ).dropDuplicates()
-    c_sig = _bands(
-        _signatures(c_base, "surface", num_hashes, width), num_hashes, bands
+    c_sig = _signatures(
+        c_base, "surface", num_hashes, width, bands
     ).withColumnRenamed("surface", "c_surface").withColumnRenamed(
         "shingles", "c_shingles"
     )

@@ -262,21 +262,14 @@ def semantic_dedup(
     DuckDB twin (queries.py::corpus_semantic_dedup) is value-exact.
     """
     from biokg_spark.operators.similarity import cosine_normed, fanout, with_norm
+    from biokg_spark.operators.skew import drop_hot_keys
 
     pts, cents = _lloyd(emb, id_col, vec_col, k, iterations)
     assign = with_norm(_assign(pts, cents), "v", "_norm").localCheckpoint(
         eager=True
     )
     pts.unpersist()
-    paired = assign
-    if max_cluster_size is not None:
-        ok = (
-            assign.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_cluster_size)
-            .select("cluster")
-        )
-        paired = assign.join(ok, "cluster", "left_semi")
+    paired = drop_hot_keys(assign, ["cluster"], max_cluster_size)
     width = fanout(emb.sparkSession, assign)
     n_buckets = -(-_KEYS_PER_TASK * width // k)
     a = paired.select(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from biokg_spark.operators.skew import drop_hot_keys
+
 
 def shingles(col: Column | str, width: int = 3) -> Column:
     """w-word shingles of normalized text (array<string>, distinct).
@@ -77,17 +79,15 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _seed_hash(seed: int, sh: Column, family: str = "md5") -> Column:
-    """One member of the MinHash hash family. BOTH families return LONG.
+def _seed_hash(seed: int, sh: Column) -> Column:
+    """One member of the MinHash hash family, as a LONG: the first 15 hex
+    chars of ``md5(seed || '|' || sh)`` converted to a 60-bit long.
 
-    ``'md5'`` (default): the first 15 hex chars of md5 converted to a
-    60-bit long — bit-identical in DuckDB as
-    ``('0x' || substr(md5(x),1,15))::BIGINT``, so it stays the
-    oracle-checked form. Numeric ordering of a fixed-width hex prefix
-    equals its lexicographic ordering, so min-aggregation semantics are
-    unchanged from the old hex-string form. ``'xxhash64'``: Spark's
-    native seeded xxhash64 — cheaper to compute, no DuckDB analog;
-    dedup-SEMANTICS equivalence pinned in tests/test_dedup.py.
+    md5 is the only family on purpose: it is bit-identical in DuckDB as
+    ``('0x' || substr(md5(x),1,15))::BIGINT``, so every signature, band
+    and candidate pair downstream stays oracle-checked. Numeric ordering
+    of a fixed-width hex prefix equals its lexicographic ordering, so
+    min-aggregation semantics are unchanged from the old hex-string form.
 
     Returning LONG (not a 32-char string) matters for the PLAN, not
     just the shuffle width: min/max over a STRING buffer is not
@@ -97,8 +97,6 @@ def _seed_hash(seed: int, sh: Column, family: str = "md5") -> Column:
     258.7 s at sf0.1, 25x its siblings). LONG buffers are
     UnsafeRow-mutable, so the k per-seed minimums plan as a single
     map-side-partial HashAggregate."""
-    if family == "xxhash64":
-        return F.xxhash64(F.lit(seed), sh)
     return F.conv(
         F.substring(F.md5(F.concat(F.lit(str(seed)), F.lit("|"), sh)), 1, 15),
         16,
@@ -106,37 +104,29 @@ def _seed_hash(seed: int, sh: Column, family: str = "md5") -> Column:
     ).cast("long")
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8, width: int = 3,
-    hash_family: str = "md5", shingle_partitions: int | None = None,
+def _min_hashes(
+    sh: DataFrame, keys: list[str], num_hashes: int, shingle_partitions: int | None
 ) -> DataFrame:
-    """Per-doc MinHash signature: (id, sig array of length k).
+    """The MinHash kernel: ``keys + _h0.._h{k-1}`` from an exploded
+    ``(keys…, sh)`` frame, the k per-seed minimums as k aggregate
+    expressions of ONE map-side-partial HashAggregate (long buffers, see
+    ``_seed_hash``).
 
-    One explode + one groupBy; the k per-seed minimums are computed as k
-    aggregate expressions in a single hash aggregate (map-side partial —
-    long buffers in both families, so this really is HashAggregate, not
-    a sort fallback). ``hash_family`` picks the oracle form ('md5',
-    60-bit md5 prefix as long) or the pure-scale form ('xxhash64',
-    cheaper hash, no DuckDB analog); see ``_seed_hash``.
-
-    ``shingle_partitions``: round-robin repartition of the exploded
-    (id, shingle) rows BEFORE the signature aggregate. The k per-shingle
-    hashes are evaluated in the partial-aggregate stage, which without
-    this runs at the parallelism of the INPUT rows — fine for a document
-    corpus (rows >> cores), pathological for few-but-huge documents
-    (e.g. whole conversations concatenated to one row each: 80 rows that
-    AQE coalesces onto a handful of cores while each row explodes to
-    ~10^4-10^5 shingles; part of the 258.7 s -> 13.9 s transcript_near_dup
-    fix at sf0.1, jointly with the shingles() lambda-binding fix above).
-    The added exchange moves RAW shingles — cheap next to
-    the k hash evaluations it parallelizes — and the partial min still
-    reduces each partition to (#docs x k) longs before the final
-    shuffle. Set it when doc count is within ~100x of the core count;
-    leave None when input parallelism already exceeds the cluster.
+    ``shingle_partitions``: hash repartition of the exploded rows BEFORE
+    the aggregate. The k per-shingle hashes are evaluated in the
+    partial-aggregate stage, which without this runs at the parallelism
+    of the INPUT rows — fine for a document corpus (rows >> cores),
+    pathological for few-but-huge rows (whole conversations concatenated
+    to one row each, or one row set per corpus slice: a handful of tasks
+    while each row explodes to ~10^4-10^5 shingles; part of the 258.7 s
+    -> 13.9 s transcript_near_dup fix at sf0.1, jointly with the
+    shingles() lambda-binding fix above). The added exchange moves RAW
+    shingles — cheap next to the k hash evaluations it parallelizes —
+    and the partial min still reduces each partition to (#keys x k)
+    longs before the final shuffle. Set it when the key count is within
+    ~100x of the core count; leave None when input parallelism already
+    exceeds the cluster.
     """
-    sh = df.select(
-        F.col(id_col), F.explode(shingles(text_col, width)).alias("sh")
-    )
     if shingle_partitions is not None:
         # deterministic hash repartition, NOT round-robin: keyless
         # repartition(n) first local-sorts its input so task retries
@@ -149,15 +139,54 @@ def minhash_signatures(
         sh = sh.repartition(
             shingle_partitions,
             F.pmod(
-                F.xxhash64(F.col(id_col), F.col("sh")),
+                F.xxhash64(*[F.col(k) for k in keys], F.col("sh")),
                 F.lit(shingle_partitions * 32),
             ),
         )
     aggs = [
-        F.min(_seed_hash(s, F.col("sh"), hash_family)).alias(f"_h{s}")
-        for s in range(num_hashes)
+        F.min(_seed_hash(s, F.col("sh"))).alias(f"_h{s}") for s in range(num_hashes)
     ]
-    sigs = sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy(*keys).agg(*aggs)
+
+
+def _lsh_bands(
+    sigs: DataFrame, keys: list[str], num_hashes: int, bands: int
+) -> DataFrame:
+    """LSH banding of a ``(keys…, sig)`` frame: one ``(keys…, band_idx,
+    band_key)`` row per band, band_key = md5 of the band's
+    ``num_hashes // bands`` signature values joined by ``|``."""
+    assert num_hashes % bands == 0
+    rows = num_hashes // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.md5(
+                F.concat_ws(
+                    "|", *[F.element_at("sig", b * rows + r + 1) for r in range(rows)]
+                )
+            ).alias("band_key"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select(*keys, F.explode(F.array(*band_cols)).alias("band")).select(
+        *keys, "band.band_idx", "band.band_key"
+    )
+
+
+def minhash_signatures(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8, width: int = 3,
+    shingle_partitions: int | None = None,
+) -> DataFrame:
+    """Per-doc MinHash signature: (id, sig array of length k).
+
+    One explode + one groupBy (``_min_hashes``); ``shingle_partitions``
+    fans the per-shingle hash work out when the corpus is few-but-huge
+    rows.
+    """
+    sh = df.select(
+        F.col(id_col), F.explode(shingles(text_col, width)).alias("sh")
+    )
+    sigs = _min_hashes(sh, [id_col], num_hashes, shingle_partitions)
     return sigs.select(
         id_col, F.array(*[F.col(f"_h{s}") for s in range(num_hashes)]).alias("sig")
     )
@@ -171,7 +200,6 @@ def minhash_lsh_candidates(
     bands: int = 4,
     width: int = 3,
     max_bucket_size: int | None = None,
-    hash_family: str = "md5",
     shingle_partitions: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band of their signature → candidate
@@ -188,23 +216,10 @@ def minhash_lsh_candidates(
     up through their other (more selective) bands, and at the cap the
     within-bucket join cost is bounded by bands·cap per row.
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, width, hash_family, shingle_partitions
+        df, text_col, id_col, num_hashes, width, shingle_partitions
     )
-    band_cols = []
-    for b in range(bands):
-        parts = [
-            F.element_at("sig", b * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_idx"), F.md5(F.concat_ws("|", *parts)).alias("band_key"))
-        )
-    bucketed = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
+    bucketed = _lsh_bands(sigs, [id_col], num_hashes, bands)
     # Materialize the (doc x bands) bucket table ONCE: the plan below
     # references it up to three times (hot-bucket count, both sides of
     # the candidate self-join), and Catalyst does no cross-branch CSE —
@@ -212,15 +227,9 @@ def minhash_lsh_candidates(
     # query's dominant cost) executed once PER REFERENCE (measured 3x at
     # sf0.1). The checkpointed frame is |docs|·bands small rows; the
     # expensive signature stage above it runs exactly once per call.
-    bucketed = bucketed.localCheckpoint(eager=True)
-    if max_bucket_size is not None:
-        ok = (
-            bucketed.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_bucket_size)
-            .select("band_idx", "band_key")
-        )
-        bucketed = bucketed.join(ok, ["band_idx", "band_key"], "left_semi")
+    bucketed = drop_hot_keys(
+        bucketed.localCheckpoint(eager=True), ["band_idx", "band_key"], max_bucket_size
+    )
     a = bucketed.alias("a")
     b2 = bucketed.alias("b")
     return (
@@ -237,6 +246,43 @@ def minhash_lsh_candidates(
     )
 
 
+def _shingle_overlaps(
+    df: DataFrame, text_col: str, id_col: str, width: int, max_doc_freq: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The inverted-index core of the n-gram pair operators:
+    ``(inter, sizes)`` with ``inter`` = (id_a, id_b, n_inter) for every
+    pair id_a < id_b sharing at least one shingle and ``sizes`` =
+    (id_col, n_sh) per document.
+
+    Pairs are generated only through shared shingles (self-equi-join on
+    the shingle), never a cross join — documents with no shingle in
+    common are never materialized as a pair. ``max_doc_freq``:
+    hot-shingle guard (``drop_hot_keys``). A shingle occurring in d docs
+    contributes d²/2 rows to the join; shingles above the cutoff carry
+    no discriminative signal (standard stopword treatment in near-dup
+    mining) and are dropped BEFORE the self-join, from the sizes and the
+    intersections alike. Ids must be unique: ``shingles()`` is distinct
+    per row, so a shingle's row count is then its document frequency.
+    """
+    # the exploded (id, shingle) frame is referenced by the df-guard, the
+    # per-doc sizes, and BOTH sides of the inverted-index self-join;
+    # materialize it once (no cross-branch CSE) so the tokenize+shingle
+    # explode runs one time instead of up to four.
+    sh = df.select(
+        F.col(id_col), F.explode(shingles(text_col, width)).alias("sh")
+    ).localCheckpoint(eager=True)
+    sh = drop_hot_keys(sh, ["sh"], max_doc_freq)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    return inter, sizes
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -247,42 +293,13 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All-pairs n-gram Jaccard similarity ≥ threshold.
 
-    Pairs are generated only through shared shingles (inverted-index
-    join), never a cross join — documents with no shingle in common are
-    never materialized as a pair. Output: (id_a, id_b, jaccard) rounded
-    to 4 dp for cross-engine comparison.
-
-    ``max_doc_freq``: hot-shingle guard. A shingle occurring in d docs
-    contributes d²/2 rows to the inverted-index join — one boilerplate
-    shingle makes the plan quadratic. Shingles whose document frequency
-    exceeds the cutoff carry no discriminative signal (standard stopword
-    treatment in near-dup mining) and are dropped BEFORE the self-join;
-    jaccard is then computed over the surviving shingle sets (sizes and
-    intersections consistently exclude the dropped shingles).
+    Inverted-index plan (``_shingle_overlaps``): pairs exist only through
+    shared shingles, and ``max_doc_freq`` drops boilerplate shingles
+    before the self-join (jaccard is then computed over the surviving
+    shingle sets). Output: (id_a, id_b, jaccard) rounded to 4 dp for
+    cross-engine comparison. Ids must be unique.
     """
-    # the exploded (id, shingle) frame is referenced by the df-guard, the
-    # per-doc sizes, and BOTH sides of the inverted-index self-join;
-    # materialize it once (no cross-branch CSE) so the tokenize+shingle
-    # explode runs one time instead of up to four.
-    sh = df.select(
-        F.col(id_col), F.explode(shingles(text_col, width)).alias("sh")
-    ).localCheckpoint(eager=True)
-    if max_doc_freq is not None:
-        ok = (
-            sh.groupBy("sh")
-            .agg(F.count_distinct(F.col(id_col)).alias("_df"))
-            .where(F.col("_df") <= max_doc_freq)
-            .select("sh")
-        )
-        sh = sh.join(ok, "sh", "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter, sizes = _shingle_overlaps(df, text_col, id_col, width, max_doc_freq)
     sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
@@ -305,7 +322,6 @@ def ngram_containment_pairs(
     id_col: str,
     width: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Asymmetric n-gram CONTAINMENT ≥ threshold: |A∩B| / |A| per
     ordered candidate pair — the truncation detector Jaccard misses.
@@ -313,44 +329,24 @@ def ngram_containment_pairs(
     shares nearly all of ITS shingles with the original, so its
     containment is ~1 while Jaccard (normalized by the UNION) can sit
     far below any near-dup threshold. Emits (id_a, id_b, n_a,
-    n_inter, containment) for the SMALLER-side direction of each
-    pair: containment of id_a's shingle set in id_b's.
+    n_inter, containment) for each direction of a pair that clears
+    the threshold: containment of id_a's shingle set in id_b's.
 
-    Same inverted-index plan as :func:`ngram_jaccard_pairs` (pairs
-    exist only through shared shingles, never a cross join;
-    ``max_doc_freq`` drops boilerplate shingles before the
-    self-join); only the final metric differs, and both directions
-    come from the SAME intersection aggregate — no second join.
+    Same inverted-index plan as :func:`ngram_jaccard_pairs`
+    (``_shingle_overlaps``); |A∩B| is symmetric, so each unordered
+    pair's intersection is counted once and then emitted in both
+    directions before the single sizes join. Ids must be unique.
     """
-    # the exploded (id, shingle) frame is referenced by the df-guard, the
-    # per-doc sizes, and BOTH sides of the inverted-index self-join;
-    # materialize it once (no cross-branch CSE) so the tokenize+shingle
-    # explode runs one time instead of up to four.
-    sh = df.select(
-        F.col(id_col), F.explode(shingles(text_col, width)).alias("sh")
-    ).localCheckpoint(eager=True)
-    if max_doc_freq is not None:
-        ok = (
-            sh.groupBy("sh")
-            .agg(F.count_distinct(F.col(id_col)).alias("_df"))
-            .where(F.col("_df") <= max_doc_freq)
-            .select("sh")
-        )
-        sh = sh.join(ok, "sh", "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter, sizes = _shingle_overlaps(df, text_col, id_col, width, None)
+    both = inter.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias("x"), F.col("id_b").alias("y")),
+                F.struct(F.col("id_b").alias("x"), F.col("id_a").alias("y")),
+            )
+        ).alias("p"),
+        "n_inter",
+    ).select(F.col("p.x").alias("id_a"), F.col("p.y").alias("id_b"), "n_inter")
     sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     # threshold on the RAW ratio, matching the DuckDB oracle's WHERE
     # (n_inter/n_a >= t); the emitted containment column stays 4-dp
@@ -358,7 +354,7 @@ def ngram_containment_pairs(
     # ratio sat in [t - 0.00005, t) — a latent cross-engine boundary
     # mismatch (ADVICE r5, medium).
     return (
-        inter.join(sz_a, "id_a")
+        both.join(sz_a, "id_a")
         .where(F.col("n_inter") * F.lit(1.0) / F.col("n_a") >= threshold)
         .withColumn(
             "containment",
@@ -468,14 +464,7 @@ def embedding_near_dup_pairs(
         .repartition(fanout(df.sparkSession, df), id_col)
         .localCheckpoint(eager=True)
     )
-    if max_bucket_size is not None:
-        ok = (
-            b.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_bucket_size)
-            .select("bucket")
-        )
-        b = b.join(ok, "bucket", "left_semi")
+    b = drop_hot_keys(b, ["bucket"], max_bucket_size)
     a, c = b.alias("a"), b.alias("c")
     return (
         a.join(
@@ -668,7 +657,6 @@ def slice_overlap(
     text_col: str,
     num_hashes: int = 32,
     width: int = 3,
-    hash_family: str = "md5",
     shingle_partitions: int | None = None,
 ) -> DataFrame:
     """MinHash Jaccard estimate BETWEEN corpus slices (not documents).
@@ -692,30 +680,14 @@ def slice_overlap(
     that tiny table with itself (broadcast; never a cross join of the
     corpus, never all-pairs of documents). The final aggregate is
     (#slices^2 x k) rows — driver-safe for hundreds of slices. Same
-    ``hash_family``/``shingle_partitions`` tiering as
-    :func:`minhash_signatures` (md5 = oracle form, xxhash64 = scale
-    form; repartition the exploded shingles when slices are few but
-    huge, which is exactly this operator's shape at 100 TB).
+    ``shingle_partitions`` fan-out as :func:`minhash_signatures`
+    (repartition the exploded shingles when slices are few but huge,
+    which is exactly this operator's shape at 100 TB).
     """
     sh = df.select(
         F.col(slice_col).alias("slice"), F.explode(shingles(text_col, width)).alias("sh")
     )
-    if shingle_partitions is not None:
-        # deterministic hash fan-out, not round-robin (see
-        # minhash_signatures: avoids the sort-before-repartition pass
-        # and is retry-safe; aggregates are order-free)
-        sh = sh.repartition(
-            shingle_partitions,
-            F.pmod(
-                F.xxhash64(F.col("slice"), F.col("sh")),
-                F.lit(shingle_partitions * 32),
-            ),
-        )
-    aggs = [
-        F.min(_seed_hash(s, F.col("sh"), hash_family)).alias(f"_h{s}")
-        for s in range(num_hashes)
-    ]
-    sigs = sh.groupBy("slice").agg(*aggs)
+    sigs = _min_hashes(sh, ["slice"], num_hashes, shingle_partitions)
     seeded = F.array(
         *[
             F.struct(F.lit(s).alias("seed"), F.col(f"_h{s}").alias("mh"))

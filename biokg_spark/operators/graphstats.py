@@ -9,8 +9,9 @@ the graph the downstream joins will fan out over?).
 Plan shape: one canonicalizing dedup, one degree aggregate, one global
 aggregate — two shuffles total, output is a single row. The degree
 percentiles use exact ``percentile`` so the DuckDB oracle matches
-hash-exactly; at 10^12 edges swap the flag to ``approx_percentile``
-(same discipline as queries.py::corpus_stats / corpus_stats_approx).
+hash-exactly. Its buffer holds one count per distinct degree, which is
+bounded by the maximum degree, not by the node count, so the exact form
+stays cheap at scale.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ def graph_profile(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    exact_percentiles: bool = True,
 ) -> DataFrame:
     """One-row shape profile of the undirected simple graph of ``edges``.
 
@@ -47,17 +47,13 @@ def graph_profile(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    if exact_percentiles:
-        pctl = F.percentile
-    else:
-        pctl = F.approx_percentile  # scale path: constant-memory sketch
     return deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         (F.sum("deg") / 2).cast("long").alias("n_edges"),
         F.min("deg").alias("min_deg"),
         F.max("deg").alias("max_deg"),
         F.round(F.avg("deg"), 4).alias("avg_deg"),
-        pctl("deg", F.lit(0.5)).cast("double").alias("p50_deg"),
-        pctl("deg", F.lit(0.9)).cast("double").alias("p90_deg"),
-        pctl("deg", F.lit(0.99)).cast("double").alias("p99_deg"),
+        F.percentile("deg", F.lit(0.5)).cast("double").alias("p50_deg"),
+        F.percentile("deg", F.lit(0.9)).cast("double").alias("p90_deg"),
+        F.percentile("deg", F.lit(0.99)).cast("double").alias("p99_deg"),
     )

@@ -18,14 +18,17 @@ partial aggregation combines map-side within the join's output
 partitions, so the only genuine hazard is a single pathological hub key
 — exactly what AQE skew-split handles for a shuffle join (both sides
 are fact-sized, so no broadcast). ``max_mid_degree`` optionally drops
-hubs wholesale first (two cheap degree aggregates), the same guard
-discipline as dedup.py's ``max_doc_freq``/``max_bucket_size``.
+hubs wholesale first (two cheap degree aggregates), the same
+``skew.drop_hot_keys`` guard as dedup.py's ``max_doc_freq``/
+``max_bucket_size``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from biokg_spark.operators.skew import drop_hot_keys
 
 
 def node_jaccard(
@@ -48,12 +51,12 @@ def node_jaccard(
     neighbor (self-equi-join on nb with a < b) — never all-pairs; a
     neighbor of degree k contributes k(k−1)/2 pairs, so
     ``max_neighbor_degree`` drops hub neighbors wholesale before the
-    join (one degree aggregate + semi-join), the same guard discipline
-    as dedup.py's ``max_doc_freq``. Degrees in the DENOMINATOR are the
-    full (unguarded) neighborhood sizes, so with the guard active the
-    score is a conservative UNDERestimate (shared hub neighbors aren't
-    counted but still inflate the union) — the right bias for an alias
-    CANDIDATE filter. ``min_shared`` prunes pairs below an intersection
+    join (``skew.drop_hot_keys``: one degree aggregate + semi-join), the
+    same guard as dedup.py's ``max_doc_freq``. Degrees in the
+    DENOMINATOR are the full (unguarded) neighborhood sizes, so with the
+    guard active the score is a conservative UNDERestimate (shared hub
+    neighbors aren't counted but still inflate the union) — the right
+    bias for an alias CANDIDATE filter. ``min_shared`` prunes pairs below an intersection
     floor before the degree joins. Intersection counts collapse
     map-side (partial agg) and the degree joins run against the
     |V|-sized count table (AQE broadcasts it when dim-sized).
@@ -62,14 +65,7 @@ def node_jaccard(
         F.col(src).alias("node"), F.col(dst).alias("nb")
     ).dropDuplicates()
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    if max_neighbor_degree is not None:
-        keep = (
-            adj.groupBy("nb")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .where(F.col("_d") <= max_neighbor_degree)
-            .select("nb")
-        )
-        adj = adj.join(keep, "nb", "left_semi")
+    adj = drop_hot_keys(adj, ["nb"], max_neighbor_degree)
     left = adj.select(F.col("node").alias("a"), "nb")
     right = adj.select(F.col("node").alias("b"), "nb")
     shared = (
@@ -129,19 +125,8 @@ def metapath_infer(
     b = links.where(F.col("pred") == second_pred).select(
         F.col("subj").alias("m"), F.col("obj").alias("o")
     )
-    if max_mid_degree is not None:
-        for side in ("a", "b"):
-            src = a if side == "a" else b
-            deg = (
-                src.groupBy("m")
-                .agg(F.count(F.lit(1)).alias("_deg"))
-                .where(F.col("_deg") <= max_mid_degree)
-                .select("m")
-            )
-            if side == "a":
-                a = a.join(deg, "m", "left_semi")
-            else:
-                b = b.join(deg, "m", "left_semi")
+    a = drop_hot_keys(a, ["m"], max_mid_degree)
+    b = drop_hot_keys(b, ["m"], max_mid_degree)
     paths = a.join(b, "m").where(F.col("s") != F.col("o"))
     inferred = paths.groupBy("s", "o").agg(
         F.countDistinct("m").alias("n_paths")

@@ -23,7 +23,7 @@ Every document in source ``s`` is emitted ``floor(e_s)`` times, plus
 one extra copy kept iff an md5 threshold on ``(doc_id, copy)`` falls
 under ``frac(e_s)`` — no RNG, so the SAME physical copies materialize
 on every run, engine, and partitioning (the determinism contract of
-``functions/text.py::split_assign`` / ``stratified_keep``).
+``functions/text.py::split_assign``).
 
 Engine-exactness: the factor math uses ONLY IEEE-754 correctly-rounded
 operations (integer sum, /, sqrt, *, -, floor) on exact integer inputs,

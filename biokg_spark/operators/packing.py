@@ -7,8 +7,8 @@ token stream is cut into ``chunk_len``-token blocks (the GPT-style
 pack-then-split; a document may straddle a block boundary, which is the
 accepted trade for zero padding waste).
 
-Determinism contract (matches functions/text.py::split_assign /
-stratified_keep): the shard comes from the first 8 hex chars of
+Determinism contract (matches functions/text.py::split_assign): the
+shard comes from the first 8 hex chars of
 ``md5(doc_id)`` — no RNG, engine-portable, stable under dataset growth
 within a shard-count; the within-shard order is (doc_id) so re-runs
 byte-match.

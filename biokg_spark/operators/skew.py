@@ -7,13 +7,36 @@ key pathological. AQE skew-join splitting
 (``spark.sql.adaptive.skewJoin.enabled``, on by default in session.py)
 handles shuffle skew after the fact; ``salt_join`` prevents it up front by
 fanning one hot key into ``n_salts`` synthetic keys and replicating the
-smaller side to match.
+smaller side to match. ``drop_hot_keys`` is the other answer, for the
+self-joins of the near-duplicate and inference operators: a key too hot
+to pair is dropped before the join (block purging).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def drop_hot_keys(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Rows of ``df`` whose ``keys`` value has at most ``cap`` rows.
+
+    The block-purging guard in front of a self-join on ``keys``: a key
+    with n rows expands to ~n²/2 join rows, so one boilerplate shingle,
+    hot LSH bucket or hub node makes the join quadratic. Such keys carry
+    no discriminative signal and are dropped wholesale. One count
+    aggregate plus a ``left_semi`` join; ``cap=None`` returns ``df``
+    unchanged (no plan node added).
+    """
+    if cap is None:
+        return df
+    ok = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") <= cap)
+        .select(*keys)
+    )
+    return df.join(ok, keys, "left_semi")
 
 
 def salt_join(

@@ -94,14 +94,6 @@ class CheckpointManager:
                 )
         return sorted(lineage, key=lambda d: d["file"])
 
-    def is_valid(self, name: str, fp: str) -> bool:
-        m = self._load_manifest(name)
-        return (
-            bool(m)
-            and m.get("fingerprint") == fp
-            and m.get("schema") is not None
-        )
-
     def run(
         self,
         name: str,
@@ -140,19 +132,10 @@ class CheckpointManager:
             return df
 
         df = build()
-        t_build = time.perf_counter()
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
-        t_write = time.perf_counter()
-        if os.environ.get("BIOKG_STAGE_DEBUG"):
-            import sys
-
-            print(
-                f"[stage {name}] build={t_build - t0:.2f}s write={t_write - t_build:.2f}s",
-                file=sys.stderr,
-            )
 
         self.spark.catalog.refreshByPath(data_dir)
         # read back with the build plan's schema: no footer-inference job,

@@ -162,6 +162,11 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
 
 
 def q(name: str, sql: str | None):
+    if name in REGISTRY:
+        # a second definition would silently shadow the first's body and
+        # oracle, so the first would never run
+        raise ValueError(f"registry query {name!r} is defined twice")
+
     def wrap(fn):
         REGISTRY[name] = (fn, sql)
         return fn
@@ -2050,32 +2055,6 @@ def corpus_stats_approx(spark, sf_dir):
 
 
 @q(
-    "corpus_stratified_sample",
-    """
-    SELECT doc_id, lang FROM documents
-    WHERE CASE
-      WHEN lang = 'en' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '4000'
-      WHEN lang = 'zh' THEN TRUE
-      ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'
-    END
-    """,
-)
-def corpus_stratified_sample(spark, sf_dir):
-    """Deterministic per-stratum downsampling
-    (functions/text.py::stratified_keep): rebalance the corpus by
-    capping the dominant language (en at 25%), keeping a low-resource
-    one whole (zh at 100%), and halving the rest — md5-threshold
-    decisions, so the SAME rows survive on every run/engine (unlike
-    ``sampleBy``'s per-run RNG)."""
-    from biokg_spark.functions.text import stratified_keep
-
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.where(
-        stratified_keep("lang", "doc_id", {"en": 0.25, "zh": 1.0}, default_rate=0.5)
-    ).select("doc_id", "lang")
-
-
-@q(
     "corpus_mixture_epochs",
     """
     WITH c AS (SELECT source, sum(n_chars) AS c_s FROM documents GROUP BY source),
@@ -3078,9 +3057,7 @@ def kg_graph_profile(spark, sf_dir):
     """One-row degree-shape profile of the emitted KG
     (operators/graphstats.py) — the audit that drives the engine's skew
     decisions (is p99_deg >> p50_deg ⇒ salt the joins). Exact
-    percentiles for the oracle; the operator's
-    ``exact_percentiles=False`` flag is the constant-memory scale path
-    (same discipline as corpus_stats / corpus_stats_approx)."""
+    percentiles, so the oracle matches hash-exactly."""
     from biokg_spark.operators.graphstats import graph_profile
 
     links = _kg_links(spark, sf_dir)

@@ -247,38 +247,6 @@ def test_corpus_filter_reason_ordering(spark):
     assert out[5] == ("non_english", False)
 
 
-def test_minhash_xxhash64_family_equivalent_semantics(spark):
-    """The xxhash64 scale family (long signatures, narrower shuffle)
-    finds the same near-duplicate structure as the oracle md5 family:
-    exact duplicates ALWAYS pair (identical shingle sets -> identical
-    signatures in any family), and on a strongly-duplicated fixture the
-    candidate sets agree."""
-    from biokg_spark.operators.dedup import minhash_lsh_candidates
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (1, base),
-        (2, base),                       # exact dup of 1
-        (3, base + " with a tiny tail"), # near dup
-        (4, "completely different content about spark catalyst plans ok"),
-        (5, "completely different content about spark catalyst plans ok"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def pairs(family):
-        return {
-            (r.id_a, r.id_b)
-            for r in minhash_lsh_candidates(
-                df, "text", "doc_id", hash_family=family
-            ).collect()
-        }
-
-    md5_pairs, xx_pairs = pairs("md5"), pairs("xxhash64")
-    assert (1, 2) in md5_pairs and (1, 2) in xx_pairs
-    assert (4, 5) in md5_pairs and (4, 5) in xx_pairs
-    assert md5_pairs == xx_pairs
-
-
 def test_line_dedup_drops_boilerplate_keeps_order(spark):
     from biokg_spark.operators.dedup import line_dedup
 

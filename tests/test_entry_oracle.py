@@ -75,3 +75,15 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert [f.name for f in df.schema.fields] == ["subj", "pred", "obj"]
+
+
+def test_registry_refuses_a_repeated_name():
+    """A second ``@q`` under a taken name would silently replace the first
+    definition, whose body and oracle would then never run (no Spark)."""
+    from biokg_spark.queries import REGISTRY, q
+
+    taken = QUERY_NAMES[0]
+    before = REGISTRY[taken]
+    with pytest.raises(ValueError, match="defined twice"):
+        q(taken, None)
+    assert REGISTRY[taken] is before

@@ -28,11 +28,10 @@ def test_star_profile_dedups_and_drops_loops(spark):
     assert row.p50_deg == 1.0  # leaves dominate
 
 
-def test_approx_path_matches_on_small_input(spark):
-    # the sketch is exact-discrete when n <= accuracy — same numbers
-    # apart from interpolation on even counts
-    edges = [("a", "b"), ("b", "c"), ("c", "d")]
-    exact = _run(spark, edges, exact_percentiles=True)
-    approx = _run(spark, edges, exact_percentiles=False)
-    assert (exact.n_nodes, exact.n_edges) == (approx.n_nodes, approx.n_edges)
-    assert approx.max_deg == exact.max_deg == 2
+def test_path_profile_interpolates_even_count_median(spark):
+    # degrees 1, 2, 2, 1: the exact percentile interpolates between the
+    # two middle values, as the DuckDB oracle's quantile_cont does
+    row = _run(spark, [("a", "b"), ("b", "c"), ("c", "d")])
+    assert (row.n_nodes, row.n_edges) == (4, 3)
+    assert (row.min_deg, row.max_deg, row.avg_deg) == (1, 2, 1.5)
+    assert row.p50_deg == 1.5

@@ -266,6 +266,29 @@ def test_unknown_predicate_raises(spark, fixture_inputs, tmp_path):
         pipe.run(tx_small, run_key="bad-vocab")
 
 
+def test_ontology_memo_ignores_a_reused_id(spark, tmp_path):
+    """The ontology memo is keyed on id(): a new ontology at a collected
+    one's address must get its own dim, not the stale checkpoint."""
+    from biokg_spark.datagen import entity_lexicon, id_mapping
+
+    schema = "entity_id string, entity_type string, pred string, value string"
+    old = spark.createDataFrame([("P00001", "PROTEIN", "OLD", "v")], schema)
+    new = spark.createDataFrame([("P00002", "PROTEIN", "NEW", "w")], schema)
+    pipe = KGPipeline(
+        spark, str(tmp_path), entity_lexicon(spark), id_mapping(spark), new
+    )
+    key = (id(spark), id(new))
+    stale = old.localCheckpoint()
+    planted = (old, stale)  # as if old had sat at new's address
+    KGPipeline._ONTO_CK_MEMO[key] = planted
+    try:
+        got = pipe._onto()
+        assert got is not planted and got is not stale
+        assert [tuple(r) for r in got.collect()] == [("P00002", "PROTEIN", "NEW", "w")]
+    finally:
+        KGPipeline._ONTO_CK_MEMO.pop(key, None)
+
+
 def test_empty_input_produces_empty_outputs(spark, tmp_path):
     """Zero matching transcripts must flow through every stage and emit
     valid EMPTY tables (resume-readable), not crash on schema inference."""

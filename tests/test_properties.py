@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis).
 
 The MentionScanner kernels are plain objects, so hypothesis hammers
-them cheaply without Spark. The dedup pair joins, k-means and the
-literal dims run on the test session with few examples.
+them cheaply without Spark. The dedup pair joins (embedding and n-gram),
+k-means and the literal dims run on the test session with few examples.
 """
 
 from __future__ import annotations
@@ -203,6 +203,100 @@ def test_kmeans_assign_matches_brute_force(spark, rows):
     )
     expect = sorted((i, ci, dist) for i, (ci, dist) in _kmeans(rows, 3).items())
     assert one == seven == expect
+
+
+# -- n-gram pair joins ---------------------------------------------------
+
+# single-space joins of a five-word vocabulary: trim/split/lower agree
+# between Spark and str.split, and shingles repeat across documents
+DOC = st.lists(st.sampled_from("abcde"), min_size=1, max_size=8).map(" ".join)
+
+
+@st.composite
+def doc_sets(draw):
+    """(doc_id, text) rows with unique ids, some planted exact copies and
+    some planted prefixes (the truncated twins containment exists for)."""
+    texts = draw(st.lists(DOC, min_size=2, max_size=8))
+    for i in draw(st.lists(st.integers(0, len(texts) - 1), max_size=2)):
+        texts.append(texts[i])
+    for i in draw(st.lists(st.integers(0, len(texts) - 1), max_size=2)):
+        words = texts[i].split(" ")
+        texts.append(" ".join(words[: max(1, len(words) // 2)]))
+    ids = draw(st.permutations(range(len(texts))))
+    return [(5 * i + 1, t) for i, t in zip(ids, texts)]
+
+
+def _shingle_sets(rows, width: int, max_doc_freq: int | None = None) -> dict:
+    """dedup.shingles in pure Python, then the hot-shingle guard: drop
+    every shingle held by more than ``max_doc_freq`` documents."""
+    sets = {}
+    for i, text in rows:
+        toks = text.split(" ")
+        if len(toks) < width:
+            sets[i] = {" ".join(toks)}
+        else:
+            sets[i] = {" ".join(toks[j : j + width]) for j in range(len(toks) - width + 1)}
+    if max_doc_freq is not None:
+        df = {}
+        for sh in sets.values():
+            for x in sh:
+                df[x] = df.get(x, 0) + 1
+        sets = {i: {x for x in sh if df[x] <= max_doc_freq} for i, sh in sets.items()}
+    return sets
+
+
+def _round4(x: float) -> float:
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+@SPARK_SETTINGS
+@given(
+    doc_sets(),
+    st.sampled_from([2, 3]),
+    st.sampled_from([0.2, 0.5, 1.0]),
+    st.sampled_from([None, 2, 3]),
+)
+def test_ngram_jaccard_pairs_match_set_arithmetic(
+    spark, rows, width, threshold, max_doc_freq
+):
+    from biokg_spark.operators.dedup import ngram_jaccard_pairs
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        map(tuple, ngram_jaccard_pairs(df, "text", "doc_id", width, threshold, max_doc_freq).collect())
+    )
+    sets = _shingle_sets(rows, width, max_doc_freq)
+    expect = sorted(
+        (a, b, j)
+        for a in sets
+        for b in sets
+        if a < b
+        and (n := len(sets[a] & sets[b]))
+        and (j := _round4(n / len(sets[a] | sets[b]))) >= threshold
+    )
+    assert got == expect
+
+
+@SPARK_SETTINGS
+@given(doc_sets(), st.sampled_from([2, 3]), st.sampled_from([0.5, 0.8, 1.0]))
+def test_ngram_containment_pairs_match_set_arithmetic(spark, rows, width, threshold):
+    from biokg_spark.operators.dedup import ngram_containment_pairs
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        map(tuple, ngram_containment_pairs(df, "text", "doc_id", width, threshold).collect())
+    )
+    sets = _shingle_sets(rows, width)
+    # both directions of every overlapping pair, each exactly once
+    expect = sorted(
+        (a, b, len(sets[a]), n, _round4(n * 1.0 / len(sets[a])))
+        for a in sets
+        for b in sets
+        if a != b
+        and (n := len(sets[a] & sets[b]))
+        and n * 1.0 / len(sets[a]) >= threshold
+    )
+    assert got == expect
 
 
 # -- literal dims --------------------------------------------------------

@@ -1,50 +1,16 @@
-"""Direct unit tests for deterministic sampling/split Columns
-(functions/text.py) — rate extremes, stratum routing, run stability."""
+"""Direct unit tests for deterministic split Columns
+(functions/text.py) — fractions, determinism, run stability."""
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import functions as F
 
-from biokg_spark.functions.text import split_assign, stratified_keep
+from biokg_spark.functions.text import split_assign
 
 
 def _docs(spark, n=400):
     rows = [(i, ["en", "zh", "de"][i % 3]) for i in range(n)]
     return spark.createDataFrame(rows, "doc_id long, lang string")
-
-
-def test_stratified_keep_rate_extremes(spark):
-    df = _docs(spark)
-    kept0 = df.where(stratified_keep("lang", "doc_id", {}, default_rate=0.0))
-    assert kept0.count() == 0
-    kept1 = df.where(stratified_keep("lang", "doc_id", {}, default_rate=1.0))
-    assert kept1.count() == df.count()  # rate >= 1 keeps even 'ffff' hashes
-
-
-def test_stratified_keep_routes_by_stratum_and_matches_hashlib(spark):
-    df = _docs(spark)
-    got = {
-        r.doc_id
-        for r in df.where(
-            stratified_keep("lang", "doc_id", {"en": 0.25, "zh": 1.0}, 0.5)
-        ).collect()
-    }
-    for i in range(400):
-        lang = ["en", "zh", "de"][i % 3]
-        rate = {"en": 0.25, "zh": 1.0}.get(lang, 0.5)
-        h = hashlib.md5(str(i).encode()).hexdigest()[:4]
-        want = rate >= 1.0 or h < format(int(rate * 65536), "04x")
-        assert (i in got) == want, (i, lang, h)
-
-
-def test_stratified_keep_is_run_stable(spark):
-    df = _docs(spark)
-    m = stratified_keep("lang", "doc_id", {"en": 0.3}, 0.6)
-    a = {r.doc_id for r in df.where(m).collect()}
-    b = {r.doc_id for r in df.where(m).collect()}
-    assert a == b and 0 < len(a) < 400
 
 
 def test_split_assign_fractions_and_determinism(spark):
