@@ -7,12 +7,12 @@ build_benchmarks.py:23) — re-architected as checkpointed DataFrame stages
 over a transcript table instead of a single-threaded file walk.
 
 The stage graph is declared once, as the ordered table of
-``KGPipeline._stages``: ``name -> (inputs, build, partition_by,
-background, own fingerprint parts)``. ``KGPipeline.run`` runs that table
-on one thread pool, each stage starting as soon as its declared inputs
-are done, and keys each checkpoint on a fingerprint chained from the
-stage's declared inputs, so a resumed run rebuilds exactly the stages
-below whatever changed. Every stage except the two views is a
+``KGPipeline._stages``: ``name -> (inputs, build, partition_by, own
+fingerprint parts)``. ``KGPipeline.run`` runs that table on one thread
+pool, each stage starting as soon as its declared inputs are done and
+submitting its jobs to Spark's default FIFO scheduler. It keys each
+checkpoint on a fingerprint chained from the stage's declared inputs, so
+a resumed run rebuilds exactly the stages below whatever changed. Every stage except the two views is a
 checkpointed parquet table (plans/checkpoint.py), resumable:
 
 - **ingest** — order/validate transcripts: duplicate (conv_id, turn_idx)
@@ -61,7 +61,6 @@ checkpointed parquet table (plans/checkpoint.py), resumable:
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -71,7 +70,6 @@ from biokg_spark.functions.dims import local_df
 from biokg_spark.operators.mentions import scan_mentions
 from biokg_spark.operators.skew import salted_collect_set
 from biokg_spark.plans.checkpoint import CheckpointManager, fingerprint
-from biokg_spark.session import BACKGROUND_POOL
 
 # Typed predicate per unordered entity-type pair; bool = undirected
 # (canonical least/greatest form). Vocabulary mirrors the reference's
@@ -587,37 +585,12 @@ class KGPipeline:
         assert_routed(routed)
         return routed, top_level_pathways(onto)
 
-    def _run_in_background_pool(self, name, fp, build, partition_by):
-        """Checkpoint a stage inside the FAIR "background" pool (weight 1
-        vs the default pool's 8 — session.py). The early output families
-        overlap the critical mentions→turn_sets chain: under FIFO their
-        head-of-line tasks steal slots from the critical path precisely
-        when parallelism is plentiful (measured ~6% e2e at local[8]),
-        while under weighted FAIR they only backfill idle slots — the
-        low-priority queue a real cluster job would use. The pool
-        property is thread-local in pinned-thread mode, so it is set
-        inside the executor thread, never inherited by the main chain."""
-        # setLocalProperty is thread-local ONLY under PySpark pinned-thread
-        # mode (PYSPARK_PIN_THREAD, default on since 3.2). If an env
-        # disables it, the property is JVM-global and this would silently
-        # demote the CRITICAL chain to the weight-1 pool — run the stage
-        # in the default pool instead (correct, marginally less overlap).
-        pinned = os.environ.get("PYSPARK_PIN_THREAD", "true").lower() != "false"
-        if not pinned:
-            return self.ckpt.run(name, fp, build, partition_by=partition_by)
-        sc = self.spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", BACKGROUND_POOL)
-        try:
-            return self.ckpt.run(name, fp, build, partition_by=partition_by)
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-
     # ------------------------------------------------------------------
     def _stages(self, transcripts: DataFrame, run_key: str) -> dict[str, tuple]:
         """The pipeline's stage graph, in declaration order (every input is
         declared before its reader): ``name -> (inputs, build,
-        partition_by, background, *own fingerprint parts)``, where
-        ``build`` takes ``{input name: its value}``.
+        partition_by, *own fingerprint parts)``, where ``build`` takes
+        ``{input name: its value}``.
 
         - ``extracted`` is the ONE pass over the wide text column that all
           four quad families read; it overlaps the mentions scan.
@@ -626,9 +599,8 @@ class KGPipeline:
           is ~0 against a checkpoint cycle's write+commit+read-back;
           ``ontology`` is the routed, lineage-truncated dim and the
           top-level pathway set.
-        - ``background`` stages read nothing from ``turn_sets`` and run in
-          the weight-1 FAIR pool (``_run_in_background_pool``), so they
-          only backfill slots the critical chain leaves idle.
+        - ``phos_quads``, ``metadata`` and ``properties`` read nothing from
+          ``turn_sets``, so they overlap the mentions→turn_sets chain.
         - ``links`` is a projection of the ``links_prov`` checkpoint: the
           provenance aggregate's key set IS the distinct links table, and
           a second pair expansion doubled the late-phase CPU (e2e 10.6 s →
@@ -636,45 +608,45 @@ class KGPipeline:
         no_onto = (None, None)
         onto = ("ontology",) if self.ontology is not None else ()
         stages = {
-            "ingest": ((), lambda d: self._ingest(transcripts), None, False,
+            "ingest": ((), lambda d: self._ingest(transcripts), None,
                        run_key, str(self.buckets)),
             "extracted": (("ingest",), lambda d: self._extract_facts(d["ingest"]),
-                          None, False),
+                          None),
             "mentions": (("ingest",), lambda d: self._mentions(d["ingest"]),
-                         None, False, self.disambiguation),
+                         None, self.disambiguation),
             "linked": (("mentions",), lambda d: self._link(d["mentions"]),
-                       None, False, self.canonicalizer),
-            "ontology": ((), lambda d: self._prepare_ontology(), None, False, run_key),
+                       None, self.canonicalizer),
+            "ontology": ((), lambda d: self._prepare_ontology(), None, run_key),
             "turn_sets": (("linked",), lambda d: self._turn_sets(d["linked"]),
-                          None, False),
+                          None),
             "phos_quads": (("extracted",), lambda d: self._phos_quads(d["extracted"]),
-                           None, True),
+                           None),
             "metadata": (
                 ("linked", *onto),
                 lambda d: self._metadata(d["linked"], d.get("ontology", no_onto)[0]),
-                ["pred"], True,
+                ["pred"],
             ),
             "properties": (onto, lambda d: self._properties(d["ontology"][0]),
-                           ["pred"], True),
+                           ["pred"]),
             "links_prov": (
                 ("turn_sets", "ingest", *onto),
                 lambda d: self._links_provenance(
                     d["ingest"], d["turn_sets"], d.get("ontology", no_onto)[1]
                 ),
-                ["pred"], False,
+                ["pred"],
             ),
             "links": (("links_prov",),
                       lambda d: d["links_prov"].select("subj", "pred", "obj"),
-                      ["pred"], False),
+                      ["pred"]),
             "quads": (("turn_sets", "extracted"),
                       lambda d: self._effect_quads(d["turn_sets"], d["extracted"]),
-                      None, False),
+                      None),
             "action_quads": (("turn_sets", "extracted"),
                              lambda d: self._action_quads(d["turn_sets"], d["extracted"]),
-                             ["pred"], False),
+                             ["pred"]),
             "expr_quads": (("turn_sets", "extracted"),
                            lambda d: self._expression_quads(d["turn_sets"], d["extracted"]),
-                           None, False),
+                           None),
         }
         if not onto:
             del stages["ontology"], stages["properties"]
@@ -689,18 +661,19 @@ class KGPipeline:
         awaited; the first failure in declaration order is raised."""
         stages = self._stages(transcripts, run_key)
         fps: dict[str, str] = {}
-        for name, (inputs, _build, _pb, _bg, *own) in stages.items():
+        for name, (inputs, _build, _pb, *own) in stages.items():
             fps[name] = fingerprint(name, *own, *(fps[i] for i in inputs))
         futs: dict[str, Future] = {}
 
         def stage(name: str):
-            inputs, build, partition_by, background, *_own = stages[name]
+            inputs, build, partition_by, *_own = stages[name]
             d = {i: futs[i].result() for i in inputs}
             if name in VIEWS:
                 return build(d)
             # looked up per call, so a wrapper set on the instance sees every stage
-            ckpt_run = self._run_in_background_pool if background else self.ckpt.run
-            return ckpt_run(name, fps[name], lambda: build(d), partition_by=partition_by)
+            return self.ckpt.run(
+                name, fps[name], lambda: build(d), partition_by=partition_by
+            )
 
         with ThreadPoolExecutor(max_workers=len(stages)) as pool:
             for name in stages:
@@ -1123,14 +1096,23 @@ class KGPipeline:
         self, outputs: dict[str, DataFrame], approved_drugs: DataFrame,
         run_key: str = "default",
     ) -> dict[str, DataFrame]:
-        """Checkpoint the five benchmark extractions over the emitted graph
-        (reference lifecycle stage 3, SURVEY.md §3.4)."""
+        """Checkpoint the benchmark extractions over the emitted graph
+        (reference lifecycle stage 3, SURVEY.md §3.4). Each ``bench_*``
+        fingerprint chains those of the ``quads``, ``links``,
+        ``action_quads`` and ``phos_quads`` checkpoints this pipeline's
+        ``run`` wrote, so a rebuilt family is never served stale.
+        ``approved_drugs`` is not a checkpoint: a caller that changes it
+        must change ``run_key``."""
         from biokg_spark.pipeline.benchmarks import derive_benchmarks
 
         derived = derive_benchmarks(outputs, approved_drugs)
+        inputs = [
+            self.ckpt.results[n].fingerprint
+            for n in ("quads", "links", "action_quads", "phos_quads")
+        ]
         out = {}
         for name, df in derived.items():
-            fp = fingerprint("bench_" + name, run_key)
+            fp = fingerprint("bench_" + name, run_key, *inputs)
             out[name] = self.ckpt.run("bench_" + name, fp, lambda df=df: df)
         return out
 

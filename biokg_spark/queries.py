@@ -1372,6 +1372,11 @@ _SHINGLES_SQL = """
     FROM tok, unnest(generate_series(1, greatest(len(ts) - 2, 1))) AS t(i))
 """
 
+# the md5 MinHash of shingle ``sh`` under ``seed``, aggregated per group:
+# the DuckDB twin of operators/dedup.py::_min_hashes
+_MINHASH_SQL = """min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
+                                      1, 15)) AS BIGINT))"""
+
 
 @q(
     "dedup_minhash_lsh",
@@ -1380,8 +1385,7 @@ _SHINGLES_SQL = """
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed),
     bands AS (
       SELECT doc_id, seed // 2 AS band_idx,
@@ -1415,8 +1419,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed),
     bands AS (
       SELECT doc_id, seed // 2 AS band_idx,
@@ -1457,8 +1460,7 @@ def dedup_cluster_components(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed)
     SELECT doc_id, string_agg(CAST(mh AS VARCHAR), '|' ORDER BY seed) AS sig
     FROM sig GROUP BY doc_id
@@ -2109,8 +2111,7 @@ def corpus_mixture_epochs(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 31)) AS seed),
     sig AS (
       SELECT slice, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM ssh, seeds GROUP BY slice, seed)
     SELECT a.slice AS slice_a, b.slice AS slice_b,
            sum(CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END) AS n_match,
@@ -2189,8 +2190,7 @@ def corpus_delta_dedup(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed),
     bands AS (
       SELECT doc_id, seed // 2 AS band_idx,
@@ -3820,8 +3820,7 @@ def kg_schema_audit(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT conv_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY conv_id, seed),
     bands AS (
       SELECT conv_id, seed // 2 AS band_idx,
@@ -4590,8 +4589,7 @@ def kg_weighted_distances(spark, sf_dir):
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed),
     bands AS (
       SELECT doc_id, seed // 2 AS band_idx,
@@ -6012,8 +6010,7 @@ def _source_matrix_sql():
     seeds AS (SELECT unnest(generate_series(0, 7)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-             min(CAST(('0x' || substr(md5(CAST(seed AS VARCHAR) || '|' || sh),
-                                      1, 15)) AS BIGINT)) AS mh
+             {_MINHASH_SQL} AS mh
       FROM sh, seeds GROUP BY doc_id, seed),
     bands AS (
       SELECT doc_id, seed // 2 AS band_idx,

@@ -10,59 +10,8 @@ counts sized to the local test harness but overridable for a real cluster.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
-
-# FAIR-scheduler pools for concurrent job submission (KGPipeline launches
-# the turn_sets-independent output families as background jobs overlapping
-# the critical mentions→turn_sets chain). Under the default FIFO scheduler
-# those early jobs get head-of-line priority and STEAL task slots from the
-# critical path exactly when parallelism is plentiful (measured: ~6% e2e
-# regression at local[8] while the same overlap HELPS at local[2], where
-# the cores are saturated either way). Weighted FAIR pools give the
-# critical chain 8/9 of contended slots while background jobs keep
-# backfilling idle ones — the same pools a real cluster job would declare.
-# "default" is the pool every un-annotated job lands in; only background
-# work opts in via BACKGROUND_POOL (see KGPipeline.run).
-BACKGROUND_POOL = "background"
-_FAIR_POOLS_XML = """<?xml version="1.0"?>
-<allocations>
-  <pool name="default">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>8</weight>
-    <minShare>0</minShare>
-  </pool>
-  <pool name="background">
-    <schedulingMode>FIFO</schedulingMode>
-    <weight>1</weight>
-    <minShare>0</minShare>
-  </pool>
-</allocations>
-"""
-
-
-def _fair_pools_file() -> str:
-    """Materialize the pool definitions where the JVM can read them (the
-    conf must be a filesystem path; a --py-files zip member is not).
-
-    Per-user filename (uid suffix): a fixed shared-tempdir name made the
-    SECOND user on a multi-user host fail with PermissionError opening a
-    file owned by the first. An existing identical file is tolerated
-    (idempotent re-create by the same user); an unwritable-but-identical
-    one is used as-is."""
-    uid = os.getuid() if hasattr(os, "getuid") else "nt"
-    path = os.path.join(
-        tempfile.gettempdir(), f"biokg_fairscheduler_{uid}.xml"
-    )
-    try:
-        with open(path, "w") as f:
-            f.write(_FAIR_POOLS_XML)
-    except PermissionError:
-        with open(path) as f:
-            if f.read() != _FAIR_POOLS_XML:
-                raise
-    return path
 
 # Defaults chosen for the local[32] sandbox; on a 1000-executor cluster the
 # same code runs with shuffle partitions sized via
@@ -120,8 +69,6 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = builder.master(master)
     conf = dict(_DEFAULTS)
-    conf["spark.scheduler.mode"] = "FAIR"
-    conf["spark.scheduler.allocation.file"] = _fair_pools_file()
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:

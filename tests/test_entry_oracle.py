@@ -87,3 +87,22 @@ def test_registry_refuses_a_repeated_name():
     with pytest.raises(ValueError, match="defined twice"):
         q(taken, None)
     assert REGISTRY[taken] is before
+
+
+def test_oracle_sql_matches_recorded_fingerprints():
+    """Every ``oracle_sql()`` text hashes to its recorded md5 in
+    scripts/oracle_fp_round_start.json, and every recorded query is
+    registered (no Spark): factoring the SQL may not change a byte."""
+    import hashlib
+    import json
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "scripts", "oracle_fp_round_start.json")) as fh:
+        ref = json.load(fh)
+    cur = {
+        k: hashlib.md5(v.encode()).hexdigest()
+        for k, v in entry_mod.oracle_sql().items()
+    }
+    assert cur == ref["fp"]
+    assert sorted(ref["fp"]) == QUERY_NAMES
+    assert len(QUERY_NAMES) == ref["n_queries"] == 147

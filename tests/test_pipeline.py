@@ -178,7 +178,7 @@ def test_resume_after_adding_ontology_matches_fresh_run(spark, fixture_inputs, t
 def test_stage_failure_raises_after_every_stage_settles(
     spark, fixture_inputs, tmp_path, monkeypatch, stage_fn
 ):
-    """A failing background stage and a failing critical-chain stage both
+    """A failing stage off the turn_sets chain and one on it both
     surface as that exact error, only after every other stage has settled:
     no Spark job is left running, and an independent stage completed."""
     _tx, lex, mp, onto = fixture_inputs

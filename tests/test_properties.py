@@ -322,3 +322,36 @@ def test_local_df_round_trips_text_and_floats(spark, rows):
         else:
             assert got_d == d
             assert math.copysign(1.0, got_d) == math.copysign(1.0, d)
+
+
+# -- token-budget selection ----------------------------------------------
+
+# quarter steps force rank ties (and bucket ties at every n_buckets);
+# the free floats land anywhere, both kinds reach outside [0, 1]
+RANK = st.one_of(
+    st.integers(-8, 12).map(lambda x: x / 4),
+    st.floats(-2, 3, allow_nan=False, allow_infinity=False),
+)
+
+
+@SPARK_SETTINGS
+@given(
+    st.lists(st.tuples(RANK, st.sampled_from([0, 0, 1, 7, 40])), min_size=1, max_size=30),
+    st.integers(0, 200),
+)
+@example([(0.5, 10), (0.5, 0), (1.5, 10), (-0.25, 0), (-0.25, 20)], 10)
+def test_budget_select_matches_global_running_sum(spark, docs, budget):
+    from biokg_spark.operators.mixture import budget_select
+
+    rows = [(i, rank, tok) for i, (rank, tok) in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, q double, n_tok long")
+    expect, before = {}, 0
+    for i, _rank, tok in sorted(rows, key=lambda r: (-r[1], r[0])):
+        expect[i] = (before, before < budget)
+        before += tok
+    for n_buckets in (1, 3, 1000):
+        got = {
+            r.doc_id: (r.running_before, r.selected)
+            for r in budget_select(df, "q", "doc_id", "n_tok", budget, n_buckets).collect()
+        }
+        assert got == expect, n_buckets
