@@ -7,6 +7,11 @@ plans, and time micro-overheads, so before/after evidence in
 OPTIMIZATION_r06.md comes from reproducible commands:
 
   python bench_extra.py --probe kg_hits,kg_pagerank --reps 3
+  SPARK_GRAFT_CPUS=4 SPARK_GRAFT_SF_DIR=$SF/sf0.01 \
+      python bench_extra.py --probe kg_scc,kg_topo_layers --reps 1
+
+``--probe`` prints, per query, the rep walls plus ``jobs`` (all jobs of
+the rep) and ``build_jobs`` (those fired before the noop write).
   python bench_extra.py --plans kg_hits --out plans/r06 --suffix before
   python bench_extra.py --micro
 """
@@ -41,18 +46,31 @@ def probe(names: list[str], reps: int) -> None:
 
     spark = make_spark(CPUS, "biokg-bench-extra")
     spark.read.parquet(os.path.join(SF_DIR, "nation.parquet")).count()  # warm
+    sc = spark.sparkContext
     out = {}
     for name in names:
         fn, _ = REGISTRY[name]
-        walls = []
+        walls, jobs, build_jobs = [], [], []
         for r in range(reps):
-            spark.sparkContext.setJobDescription(f"probe:{name}#{r}")
-            t0 = time.perf_counter()
-            run_df(fn(spark, SF_DIR))
-            walls.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        out[name] = {"min": min(walls), "walls": walls}
-        log(f"{name}: min={min(walls)} walls={walls}")
+            # one job group per rep: jobs fired while the DataFrame is
+            # being built (checkpoints, convergence counts, schema reads)
+            # are counted apart from the noop write's
+            group = f"probe:{name}#{r}"
+            sc.setJobGroup(group, group)
+            try:
+                t0 = time.perf_counter()
+                df = fn(spark, SF_DIR)
+                build_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+                run_df(df)
+                walls.append(round(time.perf_counter() - t0, 3))
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        out[name] = {
+            "min": min(walls), "walls": walls, "jobs": jobs, "build_jobs": build_jobs,
+        }
+        log(f"{name}: min={min(walls)} walls={walls} jobs={jobs} build_jobs={build_jobs}")
     print(json.dumps(out))
     spark.stop()
 

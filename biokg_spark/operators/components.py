@@ -17,12 +17,97 @@ DataFrame traps at scale):
 - every iteration's labels are eagerly localCheckpointed — otherwise the
   plan doubles per round and the convergence-check job recomputes the
   join twice.
+
+The module also holds the two iteration kernels that the SCC,
+topological-layer and operators/traversal.py loops run on — :func:`relax`
+(monotone min/max relaxation) and :func:`expand` (first-visit frontier
+expansion). Both own the lineage-truncation discipline: each round's
+rows are lazily localCheckpointed, and ONE ``count()`` per round both
+materializes that checkpoint and answers convergence (an ``isEmpty``
+probe computes part of the round, then pays a catch-up job).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def relax(
+    state: DataFrame,
+    edges: DataFrame,
+    key: str,
+    val: str,
+    step: Column,
+    better: Callable[[str], Column],
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """Monotone relaxation ``val(_d) = better(val(_d), step)`` over
+    ``edges`` (``_s``, ``_d`` and whatever ``step`` reads); ``better``
+    is ``F.min`` or ``F.max``.
+
+    ``state`` is (key, val) with ONE row per key. Each round proposes
+    ``step`` at ``_d`` for every state row joined on ``_s``, unions the
+    proposals with the state (which carries its value as ``_old``) and
+    runs one ``groupBy(key).agg(better(val), max(_old))``. A key changed
+    iff ``_old`` is NULL or differs from the new value, so convergence
+    is one ``count()`` on the round's checkpoint, not a second
+    self-join. Returns (state, converged): converged means a round
+    within ``max_rounds`` changed nothing.
+    """
+    for _ in range(max_rounds):
+        proposed = state.join(edges, F.col(key) == F.col("_s")).select(
+            F.col("_d").alias(key), step.alias(val)
+        )
+        nxt = (
+            state.withColumn("_old", F.col(val))
+            .unionByName(proposed, allowMissingColumns=True)
+            .groupBy(key)
+            .agg(better(val).alias(val), F.max("_old").alias("_old"))
+            .localCheckpoint(eager=False)
+        )
+        n_changed = nxt.where(
+            F.col("_old").isNull() | (F.col(val) != F.col("_old"))
+        ).count()
+        state = nxt.drop("_old")
+        if n_changed == 0:
+            return state, True
+    return state, False
+
+
+def expand(
+    state: DataFrame,
+    keys: list[str],
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int | None,
+) -> DataFrame:
+    """First-visit frontier expansion of a keyed state.
+
+    The first frontier is ``state`` itself. Round h anti-joins
+    ``step(frontier, h)`` (``state``'s columns, in order) on ``keys``
+    against ``state``: a key enters on its first visit only, so the
+    anti-join IS the minimum-depth rule. The new rows become the next
+    frontier; the loop stops when a round adds none or after
+    ``max_rounds`` rounds (``None``: until empty). The state is a plain
+    union of checkpointed legs — re-checkpointing it would copy the
+    whole state every round.
+    """
+    frontier = state
+    rounds = itertools.count(1) if max_rounds is None else range(1, max_rounds + 1)
+    for h in rounds:
+        nxt = (
+            step(frontier, h)
+            .join(state.select(*keys), keys, "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        if nxt.count() == 0:
+            break
+        state = state.union(nxt)
+        frontier = nxt
+    return state
 
 
 def connected_components(
@@ -155,12 +240,13 @@ def strongly_connected_components(
     never job count. Peeled nodes leave the graph; repeat.
 
     Scale shape: every step is an equi-join + min/anti-join aggregate
-    on the node id; localCheckpoint every round (lineage-truncation
-    discipline). Rounds: forward fixpoint is O(diameter) per peel; the
-    number of peels is bounded by the longest SCC-DAG chain condensed
-    onto one pivot per round — power-law graphs peel their giant SCC
-    first (the FW-BW observation). RAISES if either bound is exhausted
-    with work remaining — a silently split SCC is wrong downstream.
+    on the node id; the forward pass is :func:`relax`, the backward
+    sweep :func:`expand`. Rounds: forward fixpoint is O(diameter) per
+    peel; the number of peels is bounded by the longest SCC-DAG chain
+    condensed onto one pivot per round — power-law graphs peel their
+    giant SCC first (the FW-BW observation). RAISES if either bound is
+    exhausted with work remaining — a silently split SCC is wrong
+    downstream.
 
     Output: (id_col, scc_id) — scc_id is the smallest member id.
     """
@@ -188,50 +274,29 @@ def strongly_connected_components(
             .localCheckpoint(eager=False)
         )
         # forward min-color fixpoint
-        color = remaining.select("id", F.col("id").alias("color")).localCheckpoint(
-            eager=False
+        color, converged = relax(
+            remaining.select("id", F.col("id").alias("color")),
+            e, "id", "color", F.col("color"), F.min, max_prop,
         )
-        for _p in range(max_prop):
-            cand = color.join(e, color["id"] == e["_s"]).select(
-                F.col("_d").alias("id"), "color"
-            )
-            nxt = (
-                color.unionByName(cand)
-                .groupBy("id")
-                .agg(F.min("color").alias("color"))
-                .localCheckpoint(eager=False)
-            )
-            changed = nxt.join(
-                color.select("id", F.col("color").alias("_old")), "id"
-            ).where(F.col("color") < F.col("_old"))
-            done = changed.isEmpty()
-            color = nxt
-            if done:
-                break
-        else:
+        if not converged:
             raise RuntimeError("SCC forward propagation did not converge")
         # backward confirmation from all pivots at once, within color
         memb = color.where(F.col("id") == F.col("color")).select(
             "id", F.col("color").alias("scc_id")
         ).localCheckpoint(eager=False)
-        frontier = memb
-        while True:
-            step = (
+        own_color = color.select("id", F.col("color").alias("_c"))
+
+        def back(frontier: DataFrame, _h: int) -> DataFrame:
+            return (
                 frontier.join(e, frontier["id"] == e["_d"])
                 .select(F.col("_s").alias("id"), "scc_id")
-                .join(
-                    color.select("id", F.col("color").alias("_c")), "id"
-                )
+                .join(own_color, "id")
                 .where(F.col("_c") == F.col("scc_id"))
                 .select("id", "scc_id")
                 .distinct()
-                .join(memb.select("id"), "id", "left_anti")
-                .localCheckpoint(eager=False)
             )
-            if step.isEmpty():
-                break
-            memb = memb.union(step).localCheckpoint(eager=False)
-            frontier = step
+
+        memb = expand(memb, ["id"], back, None)
         assigned = memb if assigned is None else assigned.union(memb)
         remaining = remaining.join(
             memb.select("id"), "id", "left_anti"
@@ -284,28 +349,11 @@ def topo_layers(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    layer = (
-        scc.select("scc_id").distinct().select("scc_id", F.lit(0).alias("layer"))
-        .localCheckpoint(eager=False)
+    layer, converged = relax(
+        scc.select("scc_id").distinct().select("scc_id", F.lit(0).alias("layer")),
+        e_c, "scc_id", "layer", F.col("layer") + 1, F.max, max_rounds,
     )
-    for _ in range(max_rounds):
-        cand = layer.join(e_c, layer["scc_id"] == e_c["_s"]).select(
-            F.col("_d").alias("scc_id"), (F.col("layer") + 1).alias("layer")
-        )
-        nxt = (
-            layer.unionByName(cand)
-            .groupBy("scc_id")
-            .agg(F.max("layer").alias("layer"))
-            .localCheckpoint(eager=False)
-        )
-        changed = nxt.join(
-            layer.select("scc_id", F.col("layer").alias("_old")), "scc_id"
-        ).where(F.col("layer") > F.col("_old"))
-        done = changed.isEmpty()
-        layer = nxt
-        if done:
-            break
-    else:
+    if not converged:
         raise RuntimeError(
             "topo_layers did not converge — condensation is not a DAG "
             "(inconsistent SCC input)"

@@ -10,13 +10,11 @@ graph-shaped version of that audit.
 Algorithm: iterative peeling to a fixpoint. Each round is ONE degree
 aggregate (partial+final on node id) and ONE semi-join of the edge set
 against the surviving nodes (both endpoints) — all equi-joins on ids,
-no cartesian anywhere. The edge set is localCheckpointed every round so
-round t does not re-derive rounds 0..t-1 from the source scan (the same
-lineage-truncation discipline as operators/components.py and
-operators/pagerank.py — an iterative Spark plan that keeps its full
-lineage is the classic graph failure mode). Convergence is detected by
-edge-count stability: one cheap count per round, a driver-side scalar,
-not a collect of data.
+no cartesian anywhere. The edge set is localCheckpointed every round and
+one ``count()`` both materializes it and detects convergence (edge-count
+stability) — the discipline of the iteration kernels ``relax``/``expand``
+in operators/components.py. Exhausting ``max_iter`` before the fixpoint
+RAISES: a partly peeled edge set is not a k-core.
 
 Scale shape (100 TB): peeling touches only the current edge set, which
 shrinks monotonically; the degree aggregate map-side-combines, and the
@@ -76,6 +74,12 @@ def kcore(
         if n_now == n_edges:  # fixpoint: every remaining node has deg >= k
             break
         n_edges = n_now
+    else:
+        if n_edges:  # an empty edge set is a fixpoint whatever the round
+            raise RuntimeError(
+                f"kcore did not reach its fixpoint within max_iter={max_iter} "
+                "peels; raise max_iter"
+            )
     return _degrees(und).withColumnRenamed("deg", "core_deg")
 
 

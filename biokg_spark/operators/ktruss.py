@@ -20,11 +20,11 @@ Algorithm: iterative peel to the unique fixpoint. Each round:
 4. keep edges with support ≥ k−2 (inner join — support-0 edges drop
    implicitly).
 
-The edge set is localCheckpointed every round (the lineage-truncation
-discipline of kcore/components/pagerank); convergence = edge-count
-stability, one driver-side scalar per round. The truss is unique, so
-the fixpoint is peel-order independent and engine-reproducible — the
-DuckDB oracle unrolls the peels as MATERIALIZED CTEs (kcore's oracle
+The edge set is localCheckpointed every round (as in kcore and the
+``relax``/``expand`` kernels of operators/components.py); convergence =
+edge-count stability, one driver-side scalar per round. The truss is
+unique, so the fixpoint is peel-order independent and
+engine-reproducible — the DuckDB oracle unrolls the peels as MATERIALIZED CTEs (kcore's oracle
 discipline, including the convergence guard: the unrolled form is only
 valid when round p equals round p−1).
 """

@@ -16,13 +16,12 @@ Scale shape (100 TB): per iteration ONE shuffle join (ranks × edges on
 src) and ONE partial+final aggregate on dst. The edge table (with
 degree attached) is computed once and persisted; ranks are
 localCheckpointed every few iterations so the lineage does not grow
-linearly with iterations (same discipline as operators/components.py —
-an iterative plan that re-derives iteration t from iteration 0 is the
-classic Spark-graph failure mode). Node count N is a single driver-side
-scalar (one count aggregate), not a collect of data. Dangling mass is
-NOT redistributed (simplified variant; for symmetrized/undirected
-input every node has out-degree ≥ 1, so nothing dangles) — documented
-so the oracle matches term for term.
+linearly with iterations (the fixed-iteration counterpart of the
+``relax``/``expand`` kernels in operators/components.py). Node count N
+is a single driver-side scalar (one count aggregate), not a collect of
+data. Dangling mass is NOT redistributed (simplified variant; for
+symmetrized/undirected input every node has out-degree ≥ 1, so nothing
+dangles) — documented so the oracle matches term for term.
 """
 
 from __future__ import annotations

@@ -13,13 +13,12 @@ Algorithm: frontier-expansion BFS. Round h joins the current frontier
 against the edge list (an equi-join on the node id), anti-joins the
 already-visited set, and labels the survivors dist=h. BFS visits every
 node first at its minimum distance, so no min-aggregate is needed —
-the anti-join IS the min. Both the frontier and the visited set are
-localCheckpointed every round: an iterative plan that keeps its full
-lineage re-derives rounds 0..t-1 from the source scan at every action
-(the lineage-truncation discipline of operators/components.py,
-operators/pagerank.py, operators/kcore.py). Termination: the frontier
-empties (one cheap ``isEmpty`` action per round — a driver-side
-boolean, not a collect of data) or ``max_hops`` is reached.
+the anti-join IS the min. The loops run on the two iteration kernels
+of operators/components.py: the BFS family and betweenness' forward
+pass on :func:`expand` (frontier expansion), weighted distances on
+:func:`relax` (min relaxation). The kernels checkpoint every round
+and answer convergence with one ``count()`` per round. Termination:
+the frontier empties or ``max_hops`` is reached.
 
 Scale shape (100 TB): each round is ONE shuffle of the frontier against
 the edge list partitioned by src — with the edge table bucketed by src
@@ -41,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from biokg_spark.operators.components import expand, relax
 
 
 def bfs_distances(
@@ -67,27 +68,15 @@ def bfs_distances(
         .withColumn("dist", F.lit(0))
         .localCheckpoint(eager=False)
     )
-    frontier = dist.select("id")
-    for h in range(1, max_hops + 1):
-        nxt = (
+
+    def step(frontier: DataFrame, h: int) -> DataFrame:
+        return (
             frontier.join(e, frontier["id"] == e["_s"])
-            .select(F.col("_d").alias("id"))
+            .select(F.col("_d").alias("id"), F.lit(h).alias("dist"))
             .distinct()
-            .join(dist.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(h))
-            .localCheckpoint(eager=False)
         )
-        # full count, not isEmpty: ONE job both materializes the lazy
-        # checkpoint and answers the convergence question (a limit-style
-        # probe would partially compute, then pay a catch-up job)
-        if nxt.count() == 0:
-            break
-        # plain union of already-checkpointed legs: re-checkpointing the
-        # union copied the whole state every round (one extra job + one
-        # extra materialization per hop) for no lineage benefit.
-        dist = dist.union(nxt)
-        frontier = nxt.select("id")
-    return dist
+
+    return expand(dist, ["id"], step, max_hops)
 
 
 def bfs_oracle_sql(
@@ -145,22 +134,15 @@ def bfs_distances_per_seed(
         .select("seed", F.col("seed").alias("id"), F.lit(0).alias("dist"))
         .localCheckpoint(eager=False)
     )
-    frontier = dist.select("seed", "id")
-    for h in range(1, max_hops + 1):
-        nxt = (
+
+    def step(frontier: DataFrame, h: int) -> DataFrame:
+        return (
             frontier.join(e, frontier["id"] == e["_s"])
-            .select("seed", F.col("_d").alias("id"))
+            .select("seed", F.col("_d").alias("id"), F.lit(h).alias("dist"))
             .distinct()
-            .join(dist.select("seed", "id"), ["seed", "id"], "left_anti")
-            .withColumn("dist", F.lit(h))
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:  # one job: materialize + convergence (see bfs)
-            break
-        # plain union of checkpointed legs (see bfs_distances)
-        dist = dist.union(nxt)
-        frontier = nxt.select("seed", "id")
-    return dist
+
+    return expand(dist, ["seed", "id"], step, max_hops)
 
 
 def harmonic_centrality_sampled(
@@ -258,9 +240,8 @@ def betweenness_sampled(
     nodes receive δ from level L+1 via ONE join of the shortest-path
     DAG slice against the previous level's δ plus ONE HashAggregate,
     ``max_hops`` rounds total for ALL seeds together. Everything is
-    keyed (seed, node): |seeds| scales state, never job count.
-    localCheckpoint every round (lineage-truncation discipline of
-    bfs_distances/pagerank/kcore).
+    keyed (seed, node): |seeds| scales state, never job count. The
+    backward rounds localCheckpoint each level's δ.
     """
     assert max_hops >= 1
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
@@ -275,22 +256,16 @@ def betweenness_sampled(
         )
         .localCheckpoint(eager=False)
     )
-    frontier = state.select("seed", "id", "sigma")
-    for h in range(1, max_hops + 1):
-        nxt = (
+
+    def step(frontier: DataFrame, h: int) -> DataFrame:
+        return (
             frontier.join(e, frontier["id"] == e["_s"])
-            .select("seed", F.col("_d").alias("id"), "sigma")
-            .groupBy("seed", "id")
+            .groupBy("seed", F.col("_d").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(state.select("seed", "id"), ["seed", "id"], "left_anti")
             .select("seed", "id", F.lit(h).alias("dist"), "sigma")
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:  # one job: materialize + convergence (see bfs)
-            break
-        # plain union of checkpointed legs (see bfs_distances)
-        state = state.union(nxt)
-        frontier = nxt.select("seed", "id", "sigma")
+
+    state = expand(state, ["seed", "id"], step, max_hops)
     # shortest-path DAG slice: edge (v, w) is on a shortest path for
     # `seed` iff dist_w = dist_v + 1 (both reached)
     dv = state.select(
@@ -453,11 +428,11 @@ def weighted_distances(
     Scale shape: one equi-join (field × edges, shuffled on the node
     id — co-located when the edge table is bucketed by src) + one
     partial+final HashAggregate per round; the field never exceeds
-    |V|. Improvement check is one isEmpty per round (driver boolean,
-    not a collect). localCheckpoint every round (lineage-truncation
-    discipline). Negative weights are rejected: with a hop bound the
-    algorithm would still terminate, but "shortest" loses its meaning
-    on negative cycles and the oracle's walk min diverges.
+    |V|. The rounds are :func:`relax` with ``min``; reaching the hop
+    bound is the contract, not an error. Negative weights are rejected:
+    with a hop bound the algorithm would still terminate, but
+    "shortest" loses its meaning on negative cycles and the oracle's
+    walk min diverges.
     """
     assert max_rounds >= 0
     e = edges.select(
@@ -467,32 +442,11 @@ def weighted_distances(
     )
     if not e.where(F.col("_w") < 0).isEmpty():
         raise ValueError("weighted_distances requires non-negative weights")
-    dist = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .select("id", F.lit(0.0).alias("dist"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_rounds):
-        cand = (
-            dist.join(e, dist["id"] == e["_s"])
-            .select(F.col("_d").alias("id"), (F.col("dist") + F.col("_w")).alias("dist"))
-        )
-        merged = (
-            dist.unionByName(cand)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        improved = merged.join(
-            dist.select("id", F.col("dist").alias("_old")), "id", "left"
-        ).where(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
-        # full count: one job materializes the lazy merged checkpoint AND
-        # answers the improvement question (see bfs_distances)
-        if improved.count() == 0:
-            dist = merged
-            break
-        dist = merged
+    seeds = seeds.select(F.col(id_col).alias("id"), F.lit(0.0).alias("dist"))
+    dist = relax(
+        seeds.distinct(), e, "id", "dist", F.col("dist") + F.col("_w"), F.min,
+        max_rounds,
+    )[0]
     return dist.select(
         F.col("id").alias(id_col), F.round("dist", decimals).alias("dist")
     )

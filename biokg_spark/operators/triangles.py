@@ -37,8 +37,7 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # canonical undirected, dedup, no self-loops
     # und feeds three consumers and o feeds three more — localCheckpoint
     # both so each is computed ONCE instead of re-deriving the whole
-    # upstream lineage per self-reference (a 6× input re-scan otherwise;
-    # same lineage-truncation discipline as operators/components.py)
+    # upstream lineage per self-reference (a 6× input re-scan otherwise)
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),

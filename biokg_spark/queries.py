@@ -730,6 +730,12 @@ _KG_FIRST_TYPE = """
                 WHEN 'DRUG_PATHWAY_ASSOCIATION' THEN 'DRUG'
                 WHEN 'DISEASE_PATHWAY_ASSOCIATION' THEN 'DISEASE'
       END"""
+# (subj, obj) orientation of a typed pair: undirected predicates order
+# the ids, directed ones put the predicate's first type first
+_KG_ORIENT_SQL = f"""CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
+                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
+             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
+                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj"""
 
 
 @q(
@@ -746,10 +752,7 @@ _KG_FIRST_TYPE = """
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs),
     oriented AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL)
     SELECT DISTINCT subj, pred, obj FROM oriented
     """,
@@ -776,10 +779,7 @@ def kg_cooccurrence_links(spark, sf_dir):
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs),
     oriented AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL),
     pos AS (SELECT DISTINCT subj, pred, obj FROM oriented),
     uni AS (
@@ -831,10 +831,7 @@ _KG_LINKS_CTE = f"""{_MENTIONS_SQL},
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs),
     oriented AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL),
     links AS (SELECT DISTINCT subj, pred, obj FROM oriented)"""
 
@@ -1013,10 +1010,7 @@ def kg_node_similarity(spark, sf_dir):
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs),
     oriented AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL),
     pc AS (SELECT subj, pred, obj, count(*) AS n_pair
            FROM oriented GROUP BY subj, pred, obj),
@@ -1083,10 +1077,7 @@ def kg_entity_vocab(spark, sf_dir):
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs),
     oriented AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL),
     links AS (SELECT DISTINCT subj, pred, obj FROM oriented),
     a AS (SELECT subj AS s, obj AS m FROM links WHERE pred = 'DPI'),
@@ -1142,10 +1133,7 @@ def kg_metapath_inference(spark, sf_dir):
              CAST(substr(conv_id, 5) AS BIGINT) * 1440
                + turn_idx * 7 AS t_min,
              pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed WHERE pred IS NOT NULL)
     SELECT subj, pred, obj,
            count(*) AS n_support,
@@ -3084,10 +3072,7 @@ def _links_cte_filtered(tag: str, cond: str) -> str:
       SELECT e1, t1, e2, t2, {_KG_PRED_CASE} AS pred FROM pairs{tag}),
     oriented{tag} AS (
       SELECT pred,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN least(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e1 ELSE e2 END AS subj,
-             CASE WHEN pred IN {_KG_UNDIRECTED} THEN greatest(e1, e2)
-                  WHEN t1 = {_KG_FIRST_TYPE} THEN e2 ELSE e1 END AS obj
+             {_KG_ORIENT_SQL}
       FROM typed{tag} WHERE pred IS NOT NULL),
     links{tag} AS (SELECT DISTINCT subj, pred, obj FROM oriented{tag})"""
 

@@ -45,6 +45,18 @@ def test_cascading_peel(spark):
     assert _run(spark, edges, 2) == {}
 
 
+def test_kcore_raises_when_max_iter_stops_short(spark):
+    # a path peels only its two endpoints per round: two rounds leave
+    # n02..n09, which is not a 2-core (a path's 2-core is empty)
+    import pytest
+
+    path = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
+    df = spark.createDataFrame(path, "src string, dst string")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        kcore(df, k=2, max_iter=2).collect()
+    assert kcore(df, k=2, max_iter=6).count() == 0
+
+
 def test_k4_is_3core(spark):
     edges = [(u, v) for u, v in combinations("abcd", 2)]
     assert _run(spark, edges, 3) == {n: 3 for n in "abcd"}

@@ -2,7 +2,9 @@
 
 The MentionScanner kernels are plain objects, so hypothesis hammers
 them cheaply without Spark. The dedup pair joins (embedding and n-gram),
-k-means and the literal dims run on the test session with few examples.
+k-means, the literal dims, budget selection and the graph fixpoints
+(SCC/topological layers, BFS, weighted distances) run on the test
+session with few examples.
 """
 
 from __future__ import annotations
@@ -355,3 +357,88 @@ def test_budget_select_matches_global_running_sum(spark, docs, budget):
             for r in budget_select(df, "q", "doc_id", "n_tok", budget, n_buckets).collect()
         }
         assert got == expect, n_buckets
+
+
+# -- graph fixpoints (relax / expand kernels) ------------------------------
+
+NODES = [f"n{i}" for i in range(8)]
+NODE = st.sampled_from(NODES)
+WEIGHT = st.sampled_from([0.0, 0.5, 1.0, 2.25, 3.0])  # dyadic: exact sums
+GRAPH_SETTINGS = settings(SPARK_SETTINGS, max_examples=4)  # ~5 s per example
+
+
+def _reach(edges):
+    nxt = {}
+    for a, b in edges:
+        nxt.setdefault(a, set()).add(b)
+    nodes = {n for e in edges for n in e}
+    reach = {}
+    for u in nodes:
+        seen, todo = {u}, [u]
+        while todo:
+            for v in nxt.get(todo.pop(), ()):
+                if v not in seen:
+                    seen.add(v)
+                    todo.append(v)
+        reach[u] = seen
+    return reach
+
+
+def _topo_reference(edges):
+    """Mutual-reachability SCCs, then longest path over the condensation."""
+    reach = _reach(edges)
+    scc = {u: min(v for v in reach[u] if u in reach[v]) for u in reach}
+    preds = {}
+    for a, b in edges:
+        if scc[a] != scc[b]:
+            preds.setdefault(scc[b], set()).add(scc[a])
+    layer = {}
+
+    def depth(c):
+        if c not in layer:
+            layer[c] = max((depth(p) + 1 for p in preds.get(c, ())), default=0)
+        return layer[c]
+
+    return {u: (scc[u], depth(scc[u])) for u in scc}
+
+
+@GRAPH_SETTINGS
+@given(st.lists(st.tuples(NODE, NODE), max_size=14))
+@example([("n0", "n1"), ("n1", "n2"), ("n2", "n0"), ("n2", "n4"), ("n3", "n3"),
+          ("n3", "n4"), ("n4", "n5"), ("n5", "n6"), ("n1", "n6")])
+def test_topo_layers_match_reachability_scc_and_longest_path(spark, edges):
+    from biokg_spark.operators.components import topo_layers
+
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {r.id: (r.scc_id, r.layer) for r in topo_layers(df).collect()}
+    assert got == _topo_reference(edges)
+
+
+@GRAPH_SETTINGS
+@given(
+    st.lists(st.tuples(NODE, NODE, WEIGHT), max_size=14),
+    st.sets(NODE, min_size=1, max_size=3),
+)
+@example([("n0", "n1", 3.0), ("n0", "n2", 0.5), ("n2", "n1", 0.5), ("n1", "n1", 0.0),
+          ("n1", "n3", 1.0), ("n3", "n0", 2.25)], {"n0"})
+def test_distances_match_bfs_and_bounded_bellman_ford(spark, edges, seeds):
+    from biokg_spark.operators.traversal import bfs_distances, weighted_distances
+
+    df = spark.createDataFrame(edges, "src string, dst string, weight double")
+    seed_df = spark.createDataFrame([(s,) for s in sorted(seeds)], "id string")
+    for hops in (0, 1, 3):
+        hop, cost = {s: 0 for s in seeds}, {s: 0.0 for s in seeds}
+        for h in range(1, hops + 1):
+            prev = dict(cost)
+            for a, b, w in edges:
+                if a in hop and hop[a] == h - 1 and b not in hop:
+                    hop[b] = h
+                if a in prev and prev[a] + w < cost.get(b, math.inf):
+                    cost[b] = prev[a] + w
+        got = {r.id: r.dist for r in bfs_distances(df, seed_df, max_hops=hops).collect()}
+        assert got == hop, hops
+        got = {
+            r.id: r.dist
+            for r in weighted_distances(df, seed_df, max_rounds=hops).collect()
+        }
+        assert got == cost, hops
