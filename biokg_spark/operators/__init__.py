@@ -15,7 +15,7 @@ from biokg_spark.operators.edges import (
     union_refs,
 )
 from biokg_spark.operators.hierarchy import expand_prefixes
-from biokg_spark.operators.mentions import MentionScanner, scan_mentions
+from biokg_spark.operators.mentions import scan_mentions
 from biokg_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
 from biokg_spark.operators.skew import salt_join, salted_collect_set
 from biokg_spark.operators.stanzas import (
@@ -26,7 +26,6 @@ from biokg_spark.operators.stanzas import (
 from biokg_spark.operators.xmlscan import xml_extract_records
 
 __all__ = [
-    "MentionScanner",
     "scan_mentions",
     "canonical_undirected",
     "conflict_exclusion",

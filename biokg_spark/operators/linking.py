@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from biokg_spark.operators.mentions import normalize_surface
+
 
 def candidate_links(
     mentions: DataFrame,
@@ -33,16 +35,22 @@ def candidate_links(
 ) -> DataFrame:
     """Resolve each mention to its best-scoring candidate entity.
 
-    ``mentions``: keys + surface (one row per mention occurrence).
-    ``lexicon``: (surface, entity_id, entity_type, priority) — several
-    rows per ambiguous surface. ``priors``: optional (entity_id, prior)
-    dim, default 0. Output: keys + surface + entity_id + entity_type +
-    score, one row per mention (argmax; ties break on priority then id).
+    ``mentions``: keys + surface (one row per mention occurrence), the
+    surface in ``scan_mentions``' normalized form. ``lexicon``: (surface,
+    entity_id, entity_type, priority) — several rows per ambiguous
+    surface; its surfaces are normalized the same way before the join.
+    ``priors``: optional (entity_id, prior) dim, default 0. Output: keys +
+    surface + entity_id + entity_type + score, one row per mention
+    (argmax; ties break on priority then id).
     """
     keys_l = list(keys)
-    lex = F.broadcast(
-        lexicon.select("surface", "entity_id", "entity_type", "priority")
+    lexicon = lexicon.select(
+        normalize_surface(F.col("surface")).alias("surface"),
+        "entity_id",
+        "entity_type",
+        "priority",
     )
+    lex = F.broadcast(lexicon)
     cands = mentions.select(*keys_l, "surface").join(lex, "surface")
 
     # context = unambiguous mentions only (surfaces with exactly one

@@ -21,8 +21,9 @@ checkpointed parquet table (plans/checkpoint.py), resumable:
   downstream per-conversation op is co-located.
 - **extracted** — ONE Arrow-batched pass over the wide text column runs
   every fact extractor the quad families read (``_extract_facts``).
-- **mentions** — Arrow-batched dictionary scan (operators/mentions.py)
-  against the broadcast lexicon → (conv_id, turn_idx, entity, type).
+- **mentions** — dictionary scan (operators/mentions.py): text tokens
+  equi-joined against the broadcast, priority-resolved lexicon →
+  (conv_id, turn_idx, surface, entity, type).
 - **linked** (view) — canonicalization: broadcast join against
   id_mapping maps raw ``ALT:`` ids to canonical ids (1:N fan-out
   preserved, reference: parsers.py:1970-1988); unmapped ids pass through
@@ -716,15 +717,11 @@ class KGPipeline:
         # per-turn type context (north star: candidate entity-link scoring)
         from biokg_spark.operators.linking import candidate_links
 
-        resolved = candidate_links(
-            raw.select("conv_id", "turn_idx", "surface"), self.lexicon
-        )
-        occurrences = raw.select("conv_id", "turn_idx", "surface", "span_start")
+        occurrences = raw.select("conv_id", "turn_idx", "surface")
+        resolved = candidate_links(occurrences, self.lexicon)
         return occurrences.join(
             resolved.select("conv_id", "turn_idx", "surface", "entity_id", "entity_type"),
             ["conv_id", "turn_idx", "surface"],
-        ).select(
-            "conv_id", "turn_idx", "surface", "entity_id", "entity_type", "span_start"
         )
 
     # -- stage 3: map/link (canonicalization) -----------------------------

@@ -112,10 +112,10 @@ from biokg_spark.functions.dims import local_df  # noqa: E402
 
 
 def kg_lexicon_df(spark: SparkSession) -> DataFrame:
-    # LocalTableScan form: driver-side collects (the Arrow scanner's
-    # lexicon pull) and broadcast builds run zero tasks — the previous
-    # parallelized-RDD form cost a 32-task job per use, and coalesce(1)
-    # was worse still (locality-wait stall, 0.29 s -> 3.27 s).
+    # LocalTableScan form: driver-side collects and broadcast builds
+    # run zero tasks — the previous parallelized-RDD form cost a 32-task
+    # job per use, and coalesce(1) was worse still (locality-wait stall,
+    # 0.29 s -> 3.27 s).
     return local_df(
         spark,
         [(s, e, t, 0) for s, e, t in KG_LEXICON],
@@ -124,18 +124,13 @@ def kg_lexicon_df(spark: SparkSession) -> DataFrame:
 
 
 def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dictionary scan over the derived transcripts — JVM-only backend.
-
-    The KG lexicon is 11 single-token surfaces, for which the scanner's
-    word-boundary semantics reduce EXACTLY to tokenize + broadcast hash
-    join (operators/mentions.py::scan_mentions_sql, parity documented
-    there); every downstream consumer reads only (conv_id, turn_idx,
-    entity_id, entity_type). This helper feeds ~40 graph/embedding
-    queries, so using the codegen'd JVM path here removes the
-    JVM→Python→JVM Arrow boundary from all of them (guide §4.1) — the
-    Arrow kernel itself stays oracle-exercised by kg_mention_scan,
-    which invokes it explicitly. The lexicon is passed as the local
-    literal list, skipping the collect job the DataFrame form pays.
+    """Dictionary scan over the derived transcripts
+    (operators/mentions.py::scan_mentions). The KG lexicon is 11
+    single-token surfaces, so the scan is one token explode plus a
+    broadcast hash join, codegen'd end to end; every downstream consumer
+    reads only (conv_id, turn_idx, entity_id, entity_type). The lexicon
+    is passed as the literal list: it is tie-broken in Python and ships
+    as a LocalTableScan, so none of the ~46 consumers pays a job for it.
 
     Deliberately NOT checkpointed here: single-use consumers would pay
     an extra eager job (~0.3 s fixed cost), and multi-reference plans
@@ -145,9 +140,7 @@ def kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.19 s un-checkpointed vs 1.30 s checkpointed). The place where a
     single materialization DOES pay is ``_kg_links`` — its result is
     referenced many times SEQUENTIALLY across iterative jobs."""
-    from biokg_spark.operators.mentions import scan_mentions_sql
-
-    return scan_mentions_sql(
+    return scan_mentions(
         doc_transcripts(spark, sf_dir),
         [(s, e, t, 0) for s, e, t in KG_LEXICON],
     )
@@ -662,15 +655,13 @@ def stanza_prefix_multiplex(spark, sf_dir):
     f"WITH {_MENTIONS_SQL} SELECT conv_id, turn_idx, entity_id, entity_type FROM m",
 )
 def kg_mention_scan(spark, sf_dir):
-    """Dictionary mention detection (Arrow pandas UDF) — the parse stage.
-    Invokes the Arrow mapInPandas kernel EXPLICITLY (kg_mentions itself
-    now routes through the JVM single-token backend for the ~40 shared
-    consumers); this query keeps the Python kernel oracle-verified."""
-    return scan_mentions(
-        doc_transcripts(spark, sf_dir), kg_lexicon_df(spark)
-    ).select(
-        "conv_id", "turn_idx", "entity_id", "entity_type"
-    ).dropDuplicates()
+    """Dictionary mention detection — the parse stage — exactly as the
+    ~46 ``kg_mentions`` consumers run it: the literal-list lexicon."""
+    return (
+        kg_mentions(spark, sf_dir)
+        .select("conv_id", "turn_idx", "entity_id", "entity_type")
+        .dropDuplicates()
+    )
 
 
 @q(
@@ -678,15 +669,13 @@ def kg_mention_scan(spark, sf_dir):
     f"WITH {_MENTIONS_SQL} SELECT conv_id, turn_idx, entity_id, entity_type FROM m",
 )
 def kg_mention_scan_join(spark, sf_dir):
-    """The zero-driver-materialization lexicon-JOIN backend (positioned
-    n-gram equi-join, operators/mentions.py scan_mentions_join) against
-    the same oracle as the Arrow scanner — same mention semantics, but
-    the lexicon never leaves the executors (the backend for derived
-    lexicons beyond broadcast scale)."""
-    from biokg_spark.operators.mentions import scan_mentions_join
-
+    """The same scan against the lexicon as a DataFrame, as the pipeline
+    runs it: the lexicon is tokenized and tie-broken on the executors
+    and the longest surface comes from one scalar aggregate, so the
+    lexicon rows never reach the driver (the form for derived lexicons
+    beyond driver scale)."""
     return (
-        scan_mentions_join(doc_transcripts(spark, sf_dir), kg_lexicon_df(spark))
+        scan_mentions(doc_transcripts(spark, sf_dir), kg_lexicon_df(spark))
         .select("conv_id", "turn_idx", "entity_id", "entity_type")
         .dropDuplicates()
     )
@@ -843,8 +832,8 @@ def _kg_links(spark, sf_dir):
     # Materialized once: every iterative consumer (pagerank, HITS, the
     # embedding trainers, walks, traversal) references the edge list
     # many times across its rounds; without the checkpoint each
-    # reference re-ran the groupBy+explode+distinct derivation (and,
-    # before kg_mentions checkpointed, the Arrow scan under it).
+    # reference re-ran the mention scan and the groupBy+explode+distinct
+    # derivation over it.
     return cooccurrence_links(ents, keys=["conv_id", "turn_idx"]).localCheckpoint(
         eager=False
     )
@@ -3099,16 +3088,12 @@ def kg_snapshot_diff(spark, sf_dir):
     stand in for the previous corpus snapshot, the rest for the current
     one — added / removed / retained per (subj, pred, obj), in ONE
     full-outer hash join that reuses each side's dedup partitioning.
-    The shared mention scan is localCheckpointed: both snapshot branches
-    consume it, and without the checkpoint the Arrow scan (the query's
-    dominant cost) executes once per branch — in production the two
-    snapshots are separately checkpointed tables anyway, so
-    materialize-once is the faithful shape."""
+    Nothing is checkpointed: each branch's ``conv_no`` filter is pushed
+    below the mention scan into the documents scan, so each branch
+    tokenizes only its own snapshot's turns."""
     from biokg_spark.operators.versioning import snapshot_diff
 
     conv_no = F.substring("conv_id", 5, 16).cast("int")
-    # kg_mentions is already materialized once (localCheckpoint there);
-    # this narrow projection over it is cheap per branch.
     ents = kg_mentions(spark, sf_dir).select(
         "conv_id", "turn_idx", F.col("entity_id").alias("eid"),
         "entity_type", conv_no.alias("conv_no"),

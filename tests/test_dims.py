@@ -59,10 +59,10 @@ def test_local_df_round_trips_escapes_and_special_floats(spark):
     assert a == b == sorted(map(repr, rows))
 
 
-def test_scan_mentions_sql_list_equals_dataframe_lexicon(spark):
-    """The list fast path (no collect job) must produce exactly the
-    DataFrame path's rows."""
-    from biokg_spark.operators.mentions import scan_mentions_sql
+def test_scan_mentions_list_equals_dataframe_lexicon(spark):
+    """The list lexicon (tie-broken in Python, no job) must produce
+    exactly the DataFrame lexicon's rows."""
+    from biokg_spark.operators.mentions import scan_mentions
 
     lex_rows = [("alpha", "E1", "T1", 0), ("beta", "E2", "T2", 0)]
     lex_df = spark.createDataFrame(
@@ -73,6 +73,6 @@ def test_scan_mentions_sql_list_equals_dataframe_lexicon(spark):
          ("c2", 0, "beta-alpha! Beta")],
         "conv_id string, turn_idx int, text string",
     )
-    a = sorted(map(tuple, scan_mentions_sql(docs, lex_rows).collect()))
-    b = sorted(map(tuple, scan_mentions_sql(docs, lex_df).collect()))
+    a = sorted(map(tuple, scan_mentions(docs, lex_rows).collect()))
+    b = sorted(map(tuple, scan_mentions(docs, lex_df).collect()))
     assert a == b and len(a) == 5

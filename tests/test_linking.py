@@ -65,3 +65,26 @@ def test_one_row_per_mention(spark, lex):
     assert out.groupBy("conv_id", "turn_idx", "surface").count().where(
         F.col("count") > 1
     ).count() == 0
+
+
+def test_mixed_case_lexicon_surfaces_link(spark):
+    """The scan emits normalized (lowercased) surfaces; candidate scoring
+    must match them against the lexicon's surfaces normalized the same
+    way, or every mention of a surface with an upper-case letter drops."""
+    from biokg_spark.operators.mentions import scan_mentions
+
+    lex = spark.createDataFrame(
+        [
+            ("TP53", "P53", "PROTEIN", 0),
+            ("Ambig", "PA", "PROTEIN", 1),
+            ("Ambig", "DA", "DRUG", 0),
+        ],
+        "surface string, entity_id string, entity_type string, priority int",
+    )
+    df = spark.createDataFrame(
+        [("c0", 0, "TP53 binds ambig here")], "conv_id string, turn_idx int, text string"
+    )
+    m = scan_mentions(df, lex).select("conv_id", "turn_idx", "surface")
+    got = {(r.surface, r.entity_id) for r in candidate_links(m, lex).collect()}
+    # one unambiguous PROTEIN mention in the turn outweighs the priority
+    assert got == {("tp53", "P53"), ("ambig", "PA")}

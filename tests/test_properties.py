@@ -1,65 +1,105 @@
 """Property-based tests (hypothesis).
 
-The MentionScanner kernels are plain objects, so hypothesis hammers
-them cheaply without Spark. The dedup pair joins (embedding and n-gram),
-k-means, the literal dims, budget selection and the graph fixpoints
+The mention scan, the dedup pair joins (embedding and n-gram), k-means,
+the literal dims, budget selection and the graph fixpoints
 (SCC/topological layers, BFS, weighted distances) run on the test
-session with few examples.
+session with few examples, each against a pure-Python reference.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 
-from biokg_spark.operators.mentions import MentionScanner
+# Spark-backed examples take seconds each: run few and report a failing
+# example unshrunk, since shrinking would rerun the jobs hundreds of times
+SPARK_SETTINGS = settings(
+    max_examples=6,
+    deadline=None,
+    phases=(Phase.explicit, Phase.reuse, Phase.generate),
+)
 
-WORD = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
-TEXT = st.lists(
-    st.one_of(WORD, st.sampled_from(["alpha", "beta", "gamma", "alphabet"])),
-    min_size=0,
-    max_size=20,
-).map(" ".join)
 
-LEXICON = [
+# -- mention scan --------------------------------------------------------
+
+SINGLE_TOKEN_LEXICON = [
     ("alpha", "E1", "T1", 0),
     ("beta", "E2", "T2", 0),
-    ("alphabet", "E3", "T3", 0),  # superstring of alpha: longest-wins cases
+    ("alphabet", "E3", "T3", 0),  # superstring of alpha: one word, no match
     ("gamma", "E4", "T4", 1),
+    ("gamma", "E5", "T1", 0),  # wins the tie-break
 ]
+# space-separated multi-token surfaces overlapping the single tokens:
+# longest-at-start and contained surfaces at later starts
+MIXED_LEXICON = SINGLE_TOKEN_LEXICON + [
+    ("alpha beta", "E6", "T2", 0),
+    ("alpha beta gamma", "E7", "T3", 0),
+    ("beta gamma", "E8", "T1", 2),
+    ("beta gamma", "E9", "T2", 1),
+]
+WORD = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
+SCAN_WORD = st.one_of(
+    WORD, st.sampled_from(["alpha", "beta", "gamma", "alphabet", "Alpha", "GAMMA"])
+)
+TEXTS = st.lists(
+    st.lists(SCAN_WORD, max_size=12).map(" ".join), min_size=1, max_size=6
+)
 
 
-@settings(max_examples=300, deadline=None)
-@given(TEXT)
-def test_all_backends_agree(text):
-    rx = MentionScanner(LEXICON, backend="regex")
-    ac = MentionScanner(LEXICON, backend="ac")
-    dc = MentionScanner(LEXICON, backend="dict")  # lexicon is single-token
-    assert rx.scan_text(text) == ac.scan_text(text) == dc.scan_text(text)
-
-
-@settings(max_examples=300, deadline=None)
-@given(TEXT)
-def test_scan_matches_are_word_bounded_and_longest(text):
-    sc = MentionScanner(LEXICON, backend="ac")
+def _reference_scan(lexicon, text: str) -> list[tuple[str, str]]:
+    """Longest-first regex alternation tried at every word start, with
+    word boundaries on both sides and the lowest (priority, entity_id,
+    entity_type) per surface: (surface, entity_id) per match."""
+    best = {}
+    for surface, eid, etype, prio in lexicon:
+        best[surface] = min(best.get(surface, (prio, eid, etype)), (prio, eid, etype))
+    alts = sorted(best, key=len, reverse=True)
+    rx = re.compile(
+        r"(?:%s)(?![A-Za-z0-9_])" % "|".join(map(re.escape, alts))
+    )
     low = text.lower()
-    for start, entry in sc.scan_text(text):
-        end = start + len(entry.surface)
-        assert low[start:end] == entry.surface
-        assert start == 0 or not re.match(r"[A-Za-z0-9_]", low[start - 1])
-        assert end == len(low) or not re.match(r"[A-Za-z0-9_]", low[end])
-        # longest-at-start: no other surface longer than this one also
-        # matches at this offset with a valid right boundary
-        for other in ("alpha", "beta", "gamma", "alphabet"):
-            if len(other) > len(entry.surface) and low.startswith(other, start):
-                oend = start + len(other)
-                assert oend < len(low) and re.match(r"[A-Za-z0-9_]", low[oend]), (
-                    f"longer surface {other!r} was available at {start}"
-                )
+    out = []
+    for start in range(len(low)):
+        if start and re.match(r"[A-Za-z0-9_]", low[start - 1]):
+            continue
+        if m := rx.match(low, start):
+            out.append((m.group(0), best[m.group(0)][1]))
+    return out
+
+
+@settings(SPARK_SETTINGS, max_examples=12)
+@given(
+    TEXTS,
+    st.sampled_from([SINGLE_TOKEN_LEXICON, MIXED_LEXICON]),
+    st.booleans(),
+)
+@example(["alpha beta gamma alphabet", "Beta GAMMA alpha beta"], MIXED_LEXICON, False)
+def test_scan_matches_are_word_bounded_and_longest(spark, texts, lexicon, as_frame):
+    from biokg_spark.operators.mentions import scan_mentions
+
+    df = spark.createDataFrame(
+        [("c", i, t) for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, text string",
+    )
+    lex = lexicon
+    if as_frame:
+        lex = spark.createDataFrame(
+            lexicon, "surface string, entity_id string, entity_type string, priority int"
+        )
+    got = Counter(
+        (r.turn_idx, r.surface, r.entity_id) for r in scan_mentions(df, lex).collect()
+    )
+    expect = Counter(
+        (i, surface, eid)
+        for i, t in enumerate(texts)
+        for surface, eid in _reference_scan(lexicon, t)
+    )
+    assert got == expect
 
 
 # -- dedup pair joins ----------------------------------------------------
@@ -96,15 +136,6 @@ def _cosine(a, b) -> float:
         nb += y * y
     sim = dot / (math.sqrt(na) * math.sqrt(nb))
     return float(Decimal(repr(sim)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
-
-
-# Spark-backed examples take seconds each: run few and report a failing
-# example unshrunk, since shrinking would rerun the jobs hundreds of times
-SPARK_SETTINGS = settings(
-    max_examples=6,
-    deadline=None,
-    phases=(Phase.explicit, Phase.reuse, Phase.generate),
-)
 
 
 def _partitionings(spark, rows):
