@@ -9,8 +9,8 @@ analysis).
 
 Design rules (see SURVEY.md):
 - DataFrame/SQL only; Catalyst does pushdown/pruning/broadcast/AQE.
-- Python touches data only through Arrow-batched pandas UDFs
-  (``mapInPandas`` / ``applyInPandas``) — never row-at-a-time UDFs.
+- Python touches data only through Arrow-batched ``mapInPandas``
+  kernels — never row-at-a-time UDFs.
 - Every stage is a checkpointed table write with a manifest, enabling
   exact resume (the Spark analog of the reference's md5 memoization,
   reference: main.py:91-98, biokg/util/io.py:202-254).

@@ -20,69 +20,23 @@ out-degree >= 1 so walks run to full length.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _salt_of(col: Column, salt_partitions: int) -> Column:
-    """Deterministic salt bucket of a node id (md5-derived, so the
-    DuckDB twin is expressible as the identical arithmetic)."""
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-        .cast("long") % salt_partitions
-    ).cast("int")
-
-
-def _dense_neighbor_ranks(
-    e: DataFrame, salt_partitions: int | None
-) -> DataFrame:
+def _dense_neighbor_ranks(e: DataFrame) -> DataFrame:
     """(_s, _d, _r): a deterministic dense rank 0..deg-1 per source.
 
-    Default (``salt_partitions=None``): ONE window over ``_s`` ordered
-    by ``_d``. A Window exchange is NOT split by AQE (OSS Spark AQE
-    splits skewed join/agg partitions only), so a 10^8-degree hub is
-    one straggler task — fine up to ~10^7-degree hubs (measured at
-    10^4, SCALE.md), and the form the DuckDB oracle mirrors.
-
-    Salted (``salt_partitions=S``): two-phase exact dense rank for
-    pathological hubs. Phase 1 ranks within (``_s``, md5-salt-of-
-    ``_d``) — every sort partition is ~deg/S rows. Phase 2 computes
-    per-(src, salt) counts and a running offset over the S salt
-    buckets (a window over groups of at most S ROWS per src, never
-    over neighbors), then rank = offset + local rank. The result is a
-    deterministic bijection neighbors -> 0..deg-1 ordered by
-    (salt, _d) — a DIFFERENT (equally valid, equally deterministic)
-    ordering than the default, so walks sampled through it differ
-    row-wise from the unsalted form; pin one form per corpus.
+    ONE window over ``_s`` ordered by ``_d``. A Window exchange is NOT
+    split by AQE (OSS Spark AQE splits skewed join/agg partitions only),
+    so a 10^8-degree hub is one straggler task — fine up to ~10^7-degree
+    hubs (measured at 10^4, SCALE.md), and the form the DuckDB oracle
+    mirrors.
     """
-    if salt_partitions is None:
-        return e.withColumn(
-            "_r",
-            F.row_number().over(Window.partitionBy("_s").orderBy("_d"))
-            - F.lit(1),
-        )
-    salted = e.withColumn("_salt", _salt_of(F.col("_d"), salt_partitions))
-    local = F.row_number().over(
-        Window.partitionBy("_s", "_salt").orderBy("_d")
-    ) - F.lit(1)
-    counts = salted.groupBy("_s", "_salt").agg(F.count(F.lit(1)).alias("_n"))
-    offsets = counts.withColumn(
-        "_off",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.partitionBy("_s")
-                .orderBy("_salt")
-                .rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("_s", "_salt", "_off")
-    return (
-        salted.withColumn("_lr", local)
-        .join(offsets, ["_s", "_salt"])
-        .select(
-            "_s", "_d", (F.col("_off") + F.col("_lr")).cast("int").alias("_r")
-        )
+    return e.withColumn(
+        "_r",
+        F.row_number().over(Window.partitionBy("_s").orderBy("_d"))
+        - F.lit(1),
     )
 
 
@@ -92,20 +46,12 @@ def random_walks(
     dst: str = "dst",
     num_walks: int = 2,
     length: int = 3,
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """Rows ``(start, walk_ix, step, node)`` for deterministic walks.
 
     ``edges`` must be distinct directed pairs. Every distinct source
     node starts ``num_walks`` walks; step 0 is the start node itself
     and steps 1..length follow the md5-derived neighbor choice.
-
-    ``salt_partitions``: opt-in salted two-phase neighbor ranking for
-    graphs with pathological hubs (see ``_dense_neighbor_ranks`` — a
-    Window exchange is one task per source node and AQE cannot split
-    it). The salted ranking is a different deterministic neighbor
-    order, so the sampled walks differ from the default form; the
-    DuckDB oracle (``walk_oracle_ctes``) mirrors the DEFAULT form.
     """
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
     # ranked/deg are referenced once per step; materialize them so the
@@ -114,7 +60,7 @@ def random_walks(
     # each frame fresh attribute ids: both inherit e's ``_s`` otherwise,
     # and joining them into the same step plan is then ambiguous.
     ranked = (
-        _dense_neighbor_ranks(e, salt_partitions)
+        _dense_neighbor_ranks(e)
         .localCheckpoint(eager=False)
         .toDF("_s", "_d", "_r")
     )
@@ -256,7 +202,6 @@ def sample_neighbors(
     src: str = "src",
     dst: str = "dst",
     seed: str = "0",
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """GraphSAGE-style fan-out capping: at most ``k`` neighbors per
     node, chosen DETERMINISTICALLY — neighbors ranked by
@@ -265,29 +210,13 @@ def sample_neighbors(
     dominate every batch); the md5 rank makes epochs reproducible and
     lets ``seed`` vary the sample between epochs without RNG state.
 
-    Default: one window shuffle on src. A Window exchange is one task
-    per source node — AQE does NOT split it (it splits skewed join/agg
-    partitions only) — so a pathological hub is a straggler task; fine
-    to ~10^7-degree hubs.
-
-    ``salt_partitions=S``: exact two-phase top-k for beyond-straggler
-    hubs. Phase 1 keeps the top ``k`` within each (src, salt-of-dst)
-    group (sort partitions ~deg/S rows); phase 2 re-ranks the ≤ S·k
-    survivors per src. Top-k is order-preserving under the split, so
-    the output is IDENTICAL to the default form (unit-pinned) — unlike
-    the walk ranking, this knob changes only the plan, never the rows.
+    One window shuffle on src. A Window exchange is one task per source
+    node — AQE does NOT split it (it splits skewed join/agg partitions
+    only) — so a pathological hub is a straggler task; fine to
+    ~10^7-degree hubs.
     """
     h = F.md5(F.concat_ws("|", F.lit(seed), F.col(src), F.col(dst)))
     e = edges.select(src, dst).distinct()
-    if salt_partitions is not None:
-        w1 = Window.partitionBy(
-            src, _salt_of(F.col(dst), salt_partitions)
-        ).orderBy(h.asc(), F.col(dst).asc())
-        e = (
-            e.withColumn("_rn1", F.row_number().over(w1))
-            .where(F.col("_rn1") <= k)
-            .drop("_rn1")
-        )
     w = Window.partitionBy(src).orderBy(h.asc(), F.col(dst).asc())
     return (
         e.withColumn("_rn", F.row_number().over(w))
@@ -335,7 +264,7 @@ def node2vec_walks(
     # probe) plus by ranked/deg; materialize the distinct edge set once
     # so its shuffle does not re-run per reference (no cross-branch CSE).
     e = e.localCheckpoint(eager=False)
-    ranked = _dense_neighbor_ranks(e, None)
+    ranked = _dense_neighbor_ranks(e)
     deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
 
     frontier = (

@@ -54,12 +54,10 @@ EXPECTED = {
     # brute-force ANN: the tiny query set is broadcast and streamed against
     # every candidate partition — a non-equi theta join is the point.
     "embed_cosine_topk": {"BroadcastNestedLoopJoin present"},
-    # IVF probe selection scores every (query, centroid) pair — a
-    # deliberate cross of two tiny broadcast frames (|Q| × n_cells rows).
+    # embed_ann_ivf and embed_ann_hnsw run embed_cosine_topk's body:
+    # cosine_topk's c_id != q_id theta join against the broadcast query
+    # set plans the same deliberate BroadcastNestedLoopJoin.
     "embed_ann_ivf": {"BroadcastNestedLoopJoin present"},
-    # HNSW full-probe routing fans the tiny query set out to every cell
-    # (|Q| × n_cells rows, cells_df broadcast) — the exactness config's
-    # deliberate cross; partial-probe configs use an equi-explode instead.
     "embed_ann_hnsw": {"BroadcastNestedLoopJoin present"},
     # HITS L2 norms: a ONE-row aggregate broadcast back onto the scores
     # per iteration (operators/pagerank.py::hits) — the in-plan

@@ -199,67 +199,6 @@ def test_ego_network_hops_and_induced(spark):
     assert got[("b", "c")] == 1 and got[("c", "b")] == 2
 
 
-def test_salted_rank_is_dense_bijection(spark):
-    """The salted two-phase neighbor ranking (hub-straggler escape
-    hatch) must still be a dense 0..deg-1 bijection per source."""
-    from biokg_spark.operators.walks import _dense_neighbor_ranks
-
-    edges = [("hub", f"n{i:03d}") for i in range(57)] + [
-        ("a", "b"), ("a", "c"), ("b", "c")
-    ]
-    e = spark.createDataFrame(edges, "_s string, _d string")
-    got = _dense_neighbor_ranks(e, salt_partitions=4).collect()
-    by_src: dict[str, set[int]] = {}
-    for r in got:
-        by_src.setdefault(r["_s"], set()).add(r["_r"])
-    assert by_src["hub"] == set(range(57))
-    assert by_src["a"] == {0, 1} and by_src["b"] == {0}
-
-
-def test_sample_neighbors_salted_identical_output(spark):
-    """salt_partitions changes only the PLAN (two bounded sorts instead
-    of one per-hub sort); top-k is order-preserving under the split so
-    the rows must be byte-identical to the default form."""
-    from biokg_spark.operators.walks import sample_neighbors
-
-    edges = [("hub", f"n{i:03d}") for i in range(80)] + [
-        (f"n{i:03d}", "hub") for i in range(30)
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    base = {(r.src, r.dst) for r in sample_neighbors(df, k=5).collect()}
-    for s in (2, 7):
-        salted = {
-            (r.src, r.dst)
-            for r in sample_neighbors(df, k=5, salt_partitions=s).collect()
-        }
-        assert salted == base, s
-
-
-def test_random_walks_salted_valid_and_deterministic(spark):
-    """Salted walks traverse only real edges, run full length, and are
-    rerun-stable (a DIFFERENT deterministic neighbor order than the
-    default form, as documented)."""
-    from biokg_spark.operators.walks import random_walks
-
-    edges = [("hub", f"n{i:02d}") for i in range(40)] + [
-        (f"n{i:02d}", "hub") for i in range(40)
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    eset = set(map(tuple, edges))
-    r1 = random_walks(df, num_walks=2, length=3, salt_partitions=4).collect()
-    r2 = random_walks(df, num_walks=2, length=3, salt_partitions=4).collect()
-    assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
-    walks: dict[tuple, dict[int, str]] = {}
-    for r in r1:
-        walks.setdefault((r.start, r.walk_ix), {})[r.step] = r.node
-    n_starts = len({s for s, _ in walks})
-    assert n_starts == 41 and len(walks) == 82
-    for (s, _w), steps in walks.items():
-        assert steps[0] == s and len(steps) == 4  # full length, no dead end
-        for t in range(1, 4):
-            assert (steps[t - 1], steps[t]) in eset
-
-
 def _py_node2vec(edges, num_walks, length, p, q):
     """Row-at-a-time node2vec twin: identical md5 arithmetic and
     cumulative-weight inversion as operators/walks.py::node2vec_walks."""

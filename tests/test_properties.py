@@ -3,7 +3,8 @@
 The mention scan, the dedup pair joins (embedding and n-gram), k-means,
 the literal dims, budget selection and the graph fixpoints
 (SCC/topological layers, BFS, weighted distances) run on the test
-session with few examples, each against a pure-Python reference.
+session with few examples, each against a pure-Python reference. The
+MinHash shingle fan-out is checked against its own unsplit run.
 """
 
 from __future__ import annotations
@@ -330,6 +331,24 @@ def test_ngram_containment_pairs_match_set_arithmetic(spark, rows, width, thresh
         and n * 1.0 / len(sets[a]) >= threshold
     )
     assert got == expect
+
+
+@SPARK_SETTINGS
+@given(doc_sets(), st.sampled_from([2, 3]))
+def test_minhash_fanout_equals_unsplit_pairs(spark, rows, width):
+    """``shingle_partitions`` only spreads the signature work over more
+    tasks: the candidate pairs equal the unsplit run's, as a multiset."""
+    from biokg_spark.operators.dedup import minhash_lsh_candidates
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def pairs(p):
+        out = minhash_lsh_candidates(df, "text", "doc_id", width=width, shingle_partitions=p)
+        return sorted(map(tuple, out.collect()))
+
+    unsplit = pairs(None)
+    for p in (2, 5):
+        assert pairs(p) == unsplit, p
 
 
 # -- literal dims --------------------------------------------------------

@@ -37,160 +37,35 @@ def test_cosine_topk_matches_oracle(spark):
     assert got == expected  # 5 (.9999) then 1 (.9939) then 3 (.7071)
 
 
+def test_hnsw_string_ids(spark):
+    """The pair-kernel schema is derived from the input id column type
+    (a hardcoded 'long' broke string entity ids). ``embed_ann_hnsw`` runs
+    ``cosine_topk``, so string-keyed vectors must rank exactly as the
+    same vectors keyed by long ids."""
+    expected = [
+        (r.c_id, r.rank)
+        for r in cosine_topk(_emb(spark), _emb(spark).where("vec_id = 0"), k=3)
+        .orderBy("rank")
+        .collect()
+    ]
+    emb = spark.createDataFrame(
+        [(f"ent{i}", v) for i, v in VECS], "vec_id string, embedding array<float>"
+    )
+    q = emb.where("vec_id = 'ent0'")
+    got = [
+        (r.q_id, r.c_id, r.rank)
+        for r in cosine_topk(emb, q, k=3).orderBy("rank").collect()
+    ]
+    assert got == [("ent0", f"ent{i}", rank) for i, rank in expected]
+    assert len(got) == 3
+
+
 def test_lsh_bucketed_is_subset_of_bruteforce_candidates(spark):
     emb = _emb(spark)
     q = emb.where("vec_id = 0")
     approx = {(r.q_id, r.c_id) for r in lsh_bucketed_topk(emb, q, k=5, sign_bits=1).collect()}
     # bucket '1' on dim1>0: ids 1, 3, 5 share it; 2 and 4 don't
     assert approx == {(0, 5), (0, 1), (0, 3)}
-
-
-def test_ivf_topk_recall_vs_bruteforce(spark):
-    from biokg_spark.operators.similarity import cosine_topk, ivf_topk
-
-    from biokg_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    qs = emb.where("vec_id < 5")
-    exact = cosine_topk(emb, qs, k=3)
-    approx = ivf_topk(emb, qs, k=3, n_cells=8, n_probe=8)  # full probe = exact
-    a = {(r.q_id, r.c_id, r.rank) for r in exact.collect()}
-    b = {(r.q_id, r.c_id, r.rank) for r in approx.collect()}
-    assert a == b, "full-probe IVF must equal brute force"
-    # partial probe: results are a valid subset ranking with plausible recall
-    part = ivf_topk(emb, qs, k=3, n_cells=8, n_probe=2)
-    got = {(r.q_id, r.c_id) for r in part.collect()}
-    assert got, "partial-probe IVF returned nothing"
-    exact_pairs = {(r.q_id, r.c_id) for r in exact.collect()}
-    recall = len(got & exact_pairs) / len(exact_pairs)
-    assert recall >= 0.3, f"IVF recall suspiciously low: {recall}"
-
-
-def test_ivf_full_probe_equals_brute_force(spark):
-    """n_probe = n_cells is exactly brute force regardless of centroids —
-    also holds with a SAMPLED quantizer fit (the 100 TB path)."""
-    from biokg_spark.operators.similarity import cosine_topk, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    q = emb.where("vec_id < 4")
-    exact = {(r.q_id, r.c_id, r.rank) for r in cosine_topk(emb, q, k=3).collect()}
-    full = {
-        (r.q_id, r.c_id, r.rank)
-        for r in ivf_topk(
-            emb, q, k=3, n_cells=4, n_probe=4, fit_sample_fraction=0.5
-        ).collect()
-    }
-    assert full == exact
-
-
-def test_ivf_partial_probe_recall(spark):
-    """recall@3 vs exact top-3 as n_probe grows. The synthetic sf0.01
-    embeddings are UNCLUSTERED (near-random), for which IVF theory says
-    recall ≈ probed fraction of cells — measured 0.27/0.60/0.87 at
-    2/4/6 of 8 cells, i.e. the quantizer is behaving exactly as designed;
-    real embedding corpora cluster, pushing recall far above the probed
-    fraction. Pin: recall ≥ probe fraction (with slack) and monotone."""
-    from biokg_spark.operators.similarity import cosine_topk, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    q = emb.where("vec_id < 5")
-    exact = {(r.q_id, r.c_id) for r in cosine_topk(emb, q, k=3).collect()}
-    recalls = {}
-    for n_probe in (2, 4, 6):
-        approx = {
-            (r.q_id, r.c_id)
-            for r in ivf_topk(emb, q, k=3, n_cells=8, n_probe=n_probe).collect()
-        }
-        recalls[n_probe] = len(exact & approx) / len(exact)
-    assert recalls[2] >= 0.15 and recalls[4] >= 0.4 and recalls[6] >= 0.65, recalls
-    assert recalls[2] <= recalls[4] <= recalls[6], recalls
-
-
-def test_hnsw_full_probe_unbounded_beam_equals_brute_force(spark):
-    """The graph tier's exactness dial: probe every cell + unbounded
-    beam over the connected-by-construction base layer == brute-force
-    top-k, including sims and ranks (scored by the shared Spark cosine
-    expression)."""
-    from biokg_spark.operators.similarity import cosine_topk, hnsw_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    q = emb.where("vec_id < 5")
-    exact = {
-        (r.q_id, r.c_id, r.sim, r.rank) for r in cosine_topk(emb, q, k=3).collect()
-    }
-    got = {
-        (r.q_id, r.c_id, r.sim, r.rank) for r in hnsw_topk(emb, q, k=3).collect()
-    }
-    assert got == exact and len(got) == 15
-
-
-def test_hnsw_partial_beam_recall_monotone(spark):
-    """Approximate configs: recall@3 vs exact grows with (n_probe, ef)
-    and the candidate set stays a subset of the probed cells."""
-    from biokg_spark.operators.similarity import cosine_topk, hnsw_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    q = emb.where("vec_id < 5")
-    exact = {(r.q_id, r.c_id) for r in cosine_topk(emb, q, k=3).collect()}
-    recalls = {}
-    for n_probe, ef in ((1, 16), (2, 32), (3, 64)):
-        approx = {
-            (r.q_id, r.c_id)
-            for r in hnsw_topk(emb, q, k=3, n_probe=n_probe, ef_search=ef).collect()
-        }
-        recalls[(n_probe, ef)] = len(exact & approx) / len(exact)
-    vals = list(recalls.values())
-    assert vals[0] <= vals[1] <= vals[2], recalls
-    assert vals[0] >= 0.2 and vals[2] >= 0.7, recalls
-
-
-def test_hnsw_index_search_exhaustive_when_unbounded():
-    """Driver-free unit check of the in-process index: with ef=None the
-    beam visits EVERY element (connectivity chain), so the returned
-    candidate ranking is the exact cosine ranking."""
-    import numpy as np
-
-    from biokg_spark.operators.similarity import _HNSW
-
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(200, 16)
-    idx = _HNSW([list(v) for v in vecs], m=4)
-    qv = rng.randn(16)
-    got = idx.search(list(qv), None)
-    assert len(got) == 200  # visited everything
-    unit = vecs / np.linalg.norm(vecs, axis=1)[:, None]
-    qu = qv / np.linalg.norm(qv)
-    want = np.argsort(-(unit @ qu), kind="stable").tolist()
-    assert got[:10] == want[:10]
-
-
-def test_hnsw_string_ids(spark):
-    """The pair-kernel schema is derived from the input id column type
-    (a hardcoded 'long' broke string entity ids); full-probe unbounded
-    beam over string-keyed vectors must equal brute force."""
-    from biokg_spark.operators.similarity import cosine_topk, hnsw_topk
-
-    emb = spark.createDataFrame(
-        [(f"ent{i}", v) for i, v in VECS],
-        "vec_id string, embedding array<float>",
-    )
-    q = emb.where("vec_id = 'ent0'")
-    exact = {
-        (r.q_id, r.c_id, r.rank) for r in cosine_topk(emb, q, k=3).collect()
-    }
-    got = {(r.q_id, r.c_id, r.rank) for r in hnsw_topk(emb, q, k=3).collect()}
-    assert got == exact and len(got) == 3
-    assert all(isinstance(a, str) and isinstance(b, str) for a, b, _ in got)
 
 
 def test_ann_recall_hand_computed(spark):
